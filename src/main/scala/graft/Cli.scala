@@ -90,10 +90,10 @@ object Cli {
       if (outputs) Report.writeTargetLogs(result, outDir)
       java.nio.file.Files.write(java.nio.file.Paths.get(s"$outDir/validationReport.ttl"),
         Report.validationReportTtl(result).getBytes("UTF-8"))
-      val stats = Report.statsText(result)
+      val stats = Report.statsText(spark, result)
       java.nio.file.Files.write(java.nio.file.Paths.get(s"$outDir/stats.txt"), stats.getBytes("UTF-8"))
       java.nio.file.Files.write(java.nio.file.Paths.get(s"$outDir/validation.log"),
-        Report.validationLog(result).getBytes("UTF-8"))
+        Report.validationLog(spark, result).getBytes("UTF-8"))
       println(stats)
     } finally spark.stop()
   }

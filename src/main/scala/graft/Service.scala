@@ -26,13 +26,19 @@ import java.nio.charset.StandardCharsets
   * SparkSession serves all requests (the reference resets its endpoint
   * singleton per request; a SparkSession is request-safe as-is).
   *
+  * Both payloads render from ONE Spark action over the verdict frame
+  * (`Report.summarize`: exact per-shape counts plus the first
+  * `maxInstances` foci in Spark's focus order), and the frames the
+  * validation pinned are released in a `finally`, also when rendering
+  * fails.
+  *
   *   runMain graft.Service [port]        (default 8080)
   *   curl -X POST localhost:8080/validate \
   *     -d 'schemaDir=...&dataPath=...&maxInstances=100'
   */
 object Service {
 
-  private def jsonEscape(s: String): String =
+  private[graft] def jsonEscape(s: String): String =
     s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
@@ -40,8 +46,8 @@ object Service {
       case c => c.toString
     }
 
-  private def runValidation(spark: SparkSession, schemaDir: String,
-                            dataPath: String): ValidationResult = {
+  private[graft] def runValidation(spark: SparkSession, schemaDir: String,
+                                   dataPath: String): ValidationResult = {
     val triples =
       if (dataPath.endsWith(".ttl")) TripleStore.fromTurtleFile(spark, dataPath)
       else TripleStore.readParquet(spark, dataPath)
@@ -57,34 +63,29 @@ object Service {
   def validateToJson(spark: SparkSession, schemaDir: String, dataPath: String,
                      maxInstances: Int = 1000): String = {
     val result = runValidation(spark, schemaDir, dataPath)
-    val shapes = result.verdicts.toSeq.sortBy(_._1).map { case (id, v) =>
-      def list(df: org.apache.spark.sql.DataFrame): String =
-        df.orderBy("focus").limit(maxInstances).collect()
-          .map(r => "\"" + jsonEscape(r.getString(0)) + "\"").mkString("[", ",", "]")
-      val valid = v.validFinal.count()
-      val violated = v.invalid.count()
-      s"""    "${jsonEscape(id)}": {
-         |      "targets": ${valid + violated},
-         |      "valid": $valid,
-         |      "violated": $violated,
-         |      "valid_instances": ${list(v.validFinal)},
-         |      "invalid_instances": ${list(v.invalid)}
-         |    }""".stripMargin
-    }
-    val conforms = result.verdicts.values.forall(_.invalid.isEmpty)
-    val out =
+    try {
+      val summary = Report.summarize(spark, result, maxInstances)
+      def list(items: Seq[String]): String = items.map(i => "\"" + jsonEscape(i) + "\"").mkString("[", ",", "]")
+      val shapes = summary.toSeq.sortBy(_._1).map { case (id, s) =>
+        s"""    "${jsonEscape(id)}": {
+           |      "targets": ${s.valid + s.violated},
+           |      "valid": ${s.valid},
+           |      "violated": ${s.violated},
+           |      "valid_instances": ${list(s.validFoci)},
+           |      "invalid_instances": ${list(s.violatedFoci)}
+           |    }""".stripMargin
+      }
       s"""{
-         |  "conforms": $conforms,
-         |  "node_order": [${result.nodeOrder.map(n => "\"" + jsonEscape(n) + "\"").mkString(",")}],
+         |  "conforms": ${summary.values.forall(_.violated == 0)},
+         |  "node_order": ${list(result.nodeOrder)},
          |  "shapes": {
          |${shapes.mkString(",\n")}
          |  }
          |}""".stripMargin
-    result.unpersist()
-    out
+    } finally result.unpersist()
   }
 
-  private def htmlEscape(s: String): String =
+  private[graft] def htmlEscape(s: String): String =
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;").replace("\"", "&quot;")
 
   /** The reference's HTML result table (app/__init__.py:47-92): one row per
@@ -95,27 +96,20 @@ object Service {
                      maxInstances: Int = 1000): String = {
     val t0 = System.nanoTime()
     val result = runValidation(spark, schemaDir, dataPath)
-    val rows = new StringBuilder
-    var n = 0
-    result.verdicts.toSeq.sortBy(_._1).foreach { case (id, v) =>
-      def emit(df: org.apache.spark.sql.DataFrame, verdict: String, color: String): Unit =
-        df.orderBy("focus").limit(maxInstances).collect().foreach { r =>
-          n += 1
-          val inst = htmlEscape(r.getString(0))
-          val shape = htmlEscape(id.stripPrefix("<").stripSuffix(">"))
-          rows ++= s"""<tr><td>$inst</td><td>$shape</td><td style="color: $color">$verdict</td><td>$shape</td></tr>"""
-        }
-      emit(v.validFinal, "valid", "green")
-      emit(v.invalid, "invalid", "red")
-    }
-    val secs = (System.nanoTime() - t0) / 1e9
-    val header = Seq("instance", "shape", "validation result", "finished@shape")
-      .map(h => s"<th>$h</th>").mkString
-    val out = s"""<div>graft (Trav-SHACL semantics) returned $n validation results in $secs seconds.<br><br>""" +
-      """<table border="0px" style="border-spacing: 10px; margin-left: auto; margin-right: auto;">""" +
-      s"<tr>$header</tr>$rows</table></div>"
-    result.unpersist()
-    out
+    try {
+      val rows = Report.summarize(spark, result, maxInstances).toSeq.sortBy(_._1).flatMap { case (id, s) =>
+        val shape = htmlEscape(id.stripPrefix("<").stripSuffix(">"))
+        def row(focus: String, verdict: String, color: String): String =
+          s"""<tr><td>${htmlEscape(focus)}</td><td>$shape</td><td style="color: $color">$verdict</td><td>$shape</td></tr>"""
+        s.validFoci.map(row(_, "valid", "green")) ++ s.violatedFoci.map(row(_, "invalid", "red"))
+      }
+      val secs = (System.nanoTime() - t0) / 1e9
+      val header = Seq("instance", "shape", "validation result", "finished@shape")
+        .map(h => s"<th>$h</th>").mkString
+      s"""<div>graft (Trav-SHACL semantics) returned ${rows.size} validation results in $secs seconds.<br><br>""" +
+        """<table border="0px" style="border-spacing: 10px; margin-left: auto; margin-right: auto;">""" +
+        s"<tr>$header</tr>${rows.mkString}</table></div>"
+    } finally result.unpersist()
   }
 
   /** The reference's GET /validate form (validate.jinja2 equivalent). */

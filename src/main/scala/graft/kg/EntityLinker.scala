@@ -117,6 +117,7 @@ object EntityLinker {
     *    bytes, then one hashInt step per seed (the same XXH64 chain the
     *    native kernels reproduce, SetSketchParitySpec);
     *  - band keys: `xxhash64(h_b…)` fold over the band's slots;
+    *  - representative length: codepoints (Spark's `length`);
     *  - pair orientation and representative ties: UTF8 binary order (what
     *    Spark's string `<` and struct `min` compare);
     *  - components: min-id union-find, as [[ConnectedComponents]]' fallback.
@@ -194,13 +195,15 @@ object EntityLinker {
       val (ri, rj) = (find(i), find(j))
       if (ri != rj) { if (binLt(all(ri), all(rj))) parent(rj) = ri else parent(ri) = rj }
     }
-    // representative per component: longest surface, ties binary-smallest
+    // representative per component: longest surface in codepoints (Spark's
+    // `length`, not UTF-16 units), ties binary-smallest
+    def len(i: Int): Int = all(i).codePointCount(0, all(i).length)
     val rep = scala.collection.mutable.HashMap.empty[Int, Int]
     parent.keysIterator.foreach { i =>
       val r = find(i)
       val cur = rep.get(r)
-      if (cur.isEmpty || all(i).length > all(cur.get).length ||
-          (all(i).length == all(cur.get).length && binLt(all(i), all(cur.get))))
+      if (cur.isEmpty || len(i) > len(cur.get) ||
+          (len(i) == len(cur.get) && binLt(all(i), all(cur.get))))
         rep(r) = i
     }
     all.indices.map { i =>

@@ -1,5 +1,6 @@
 package graft.shacl
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
@@ -12,6 +13,38 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * unbounded result to the driver.
   */
 object Report {
+
+  /** One shape's exact verdict counts plus the first foci of each list. */
+  final case class ShapeSummary(valid: Long, violated: Long,
+                                validFoci: Seq[String], violatedFoci: Seq[String])
+
+  /** Every shape's valid/violated counts and the first `maxInstances` foci
+    * of each list, in Spark's `focus` order (UTF-8 binary, as
+    * `orderBy("focus")`), from ONE Spark action over [[verdictFrame]]:
+    * `count(*)` and `row_number()` over the (shape, verdict) window,
+    * filtered on the row number. Each non-empty group keeps its first row
+    * even at `maxInstances = 0`, so its count survives truncation; the
+    * collected rows are bounded by groups × max(maxInstances, 1). Shapes
+    * with no rows (no targets) summarize as 0/0 with empty lists. */
+  def summarize(spark: SparkSession, result: ValidationResult,
+                maxInstances: Int): Map[String, ShapeSummary] = {
+    val group = Window.partitionBy("shape", "verdict")
+    val rows = verdictFrame(spark, result)
+      .select(col("shape"), col("verdict"), col("focus"),
+        count(lit(1)).over(group).as("n"),
+        row_number().over(group.orderBy("focus")).as("i"))
+      .filter(col("i") <= math.max(maxInstances, 1))
+      .collect()
+    val groups = rows.groupBy(r => (r.getString(0), r.getString(1))).map { case (key, rs) =>
+      key -> (rs.head.getLong(3), rs.sortBy(_.getInt(4)).take(maxInstances).map(_.getString(2)).toSeq)
+    }
+    val none = (0L, Seq.empty[String])
+    result.verdicts.keys.map { id =>
+      val (nValid, valid) = groups.getOrElse((id, "valid"), none)
+      val (nViolated, violated) = groups.getOrElse((id, "violated"), none)
+      id -> ShapeSummary(nValid, nViolated, valid, violated)
+    }.toMap
+  }
 
   /** All verdicts as one DataFrame(shape, focus, verdict). Each shape's
     * `marked` frame is read ONCE (verdict = CASE over the T/F flags) rather
@@ -120,12 +153,13 @@ object Report {
   /** `validation.log` parity (Validation.validation_output writes the
     * stats log + global valid/invalid totals): per-shape progress lines,
     * node order, and the final target totals. */
-  def validationLog(result: ValidationResult): String = {
-    val perShape = result.verdicts.toSeq.sortBy(_._1).map { case (id, v) =>
-      s"Evaluated shape $id: valid=${v.validFinal.count()} violated=${v.invalid.count()}"
+  def validationLog(spark: SparkSession, result: ValidationResult): String = {
+    val summary = summarize(spark, result, maxInstances = 0)
+    val perShape = summary.toSeq.sortBy(_._1).map { case (id, s) =>
+      s"Evaluated shape $id: valid=${s.valid} violated=${s.violated}"
     }
-    val valid = result.verdicts.values.map(_.validFinal.count()).sum
-    val invalid = result.verdicts.values.map(_.invalid.count()).sum
+    val valid = summary.values.map(_.valid).sum
+    val invalid = summary.values.map(_.violated).sum
     (Seq(s"Node order: ${result.nodeOrder.mkString(", ")}") ++ perShape ++ Seq(
       s"Shapes evaluated: ${result.verdicts.size}",
       s"Fixpoint iterations: ${result.stats.fixpointIterations}",
@@ -145,10 +179,11 @@ object Report {
     *  - query time         → plan/compile phase (no queries are shipped)
     *  - interleaving time  → evaluation wall-clock
     *  - saturation time    → share of evaluation inside cyclic fixpoints */
-  def statsText(result: ValidationResult): String = {
+  def statsText(spark: SparkSession, result: ValidationResult): String = {
     val st = result.stats
+    val summary = summarize(spark, result, maxInstances = 0)
     val perShape = result.verdicts.toSeq.sortBy(_._1).map { case (id, v) =>
-      (id, v.validFinal.count(), v.invalid.count(), v.marked.count())
+      (id, summary(id).valid, summary(id).violated, v.marked.count())
     }
     val valid = perShape.map(_._2).sum
     val invalid = perShape.map(_._3).sum

@@ -1,8 +1,11 @@
 package graft.shacl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.rdf.Rdf
+
+import scala.util.control.NonFatal
 
 /** Configuration knobs with reference parity (main.py:20-53). The traversal/
   * heuristic knobs and `selective` never change VERDICTS (the reference test
@@ -64,19 +67,26 @@ final case class ValidationResult(
     verdicts: Map[String, ShapeVerdict],
     nodeOrder: Seq[String],
     stats: ValidationStats,
-    sharedCached: Seq[DataFrame] = Nil
+    pinned: Seq[DataFrame] = Nil
 ) {
   def valid(shapeId: String): DataFrame = verdicts(shapeId).validFinal
   def invalid(shapeId: String): DataFrame = verdicts(shapeId).invalid
 
-  /** Release cached verdict/target frames once consumers have materialized
-    * their outputs — long-lived sessions running many validations would
-    * otherwise accumulate executor storage. */
-  def unpersist(): Unit = {
-    verdicts.values.foreach { v =>
-      v.targets.unpersist(); v.inv0.unpersist(); v.marked.unpersist()
-    }
-    sharedCached.foreach(_.unpersist())
+  /** Release every frame the run pinned, persisted or eagerly
+    * local-checkpointed, once consumers have materialized their outputs —
+    * long-lived sessions running many validations would otherwise hold
+    * executor storage until the GC-driven ContextCleaner gets to it. */
+  def unpersist(): Unit = pinned.foreach(ValidationResult.release)
+}
+
+object ValidationResult {
+  /** Free one pinned frame. A persisted frame leaves the cache manager; an
+    * eager `localCheckpoint` is a LogicalRDD over the checkpointed RDD,
+    * whose blocks `Dataset.unpersist` does not free, so the RDD itself is
+    * unpersisted. */
+  private[shacl] def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ => df.unpersist()
   }
 }
 
@@ -130,6 +140,13 @@ final class Validator(
   import spark.implicits._
 
   private val stats = new ValidationStats
+
+  /** Every frame this run pins, handed to the result for release (or
+    * released here when the run fails). */
+  private val pinned = scala.collection.mutable.ArrayBuffer[DataFrame]()
+  private def persisted(df: DataFrame): DataFrame = { pinned += df.persist(); df }
+  private def checkpointed(df: DataFrame): DataFrame = { val c = df.localCheckpoint(true); pinned += c; c }
+  private def unpin(df: DataFrame): Unit = { pinned -= df; ValidationResult.release(df) }
 
   /** Edges for a path: (focus, o) — see [[PathAlgebra.edges]] (shared with
     * A10 target pre-filtering so both sides agree on path semantics). */
@@ -232,8 +249,7 @@ final class Validator(
       }
       optionSets.reduce(_ union _).distinct()
     }
-    val orSet = groupSets.reduce((a, b) => a.join(b, Seq("focus"), "left_semi"))
-      .localCheckpoint(true)
+    val orSet = checkpointed(groupSets.reduce((a, b) => a.join(b, Seq("focus"), "left_semi")))
     if (orSet.isEmpty) None
     else Some(targets.join(orSet, Seq("focus"), "left_anti"))
   }
@@ -295,7 +311,11 @@ final class Validator(
 
   // ------------------------------------------------------------------ run
 
-  def run(): ValidationResult = {
+  def run(): ValidationResult =
+    try evaluate()
+    catch { case NonFatal(e) => pinned.foreach(ValidationResult.release); throw e }
+
+  private def evaluate(): ValidationResult = {
     val t0 = System.nanoTime()
     val nodeOrder = Traversal.plan(schema, config.traversal, config.heuristics)
     val sccs = scheduleSccs(schema.sccsInEvaluationOrder, nodeOrder)
@@ -306,7 +326,7 @@ final class Validator(
       * acyclic shapes stay LAZY — one Catalyst plan per shape, materialized
       * only when a parent or the final report consumes it. */
     def pin(id: String, df: DataFrame): DataFrame =
-      if (cyclicIds.contains(id)) df.localCheckpoint(true) else df.persist()
+      if (cyclicIds.contains(id)) checkpointed(df) else persisted(df)
 
     // Static per-shape artifacts. With enough shapes, ALL target scans
     // share ONE type-scan + distinct over (class, subj) — per-shape target
@@ -329,7 +349,7 @@ final class Validator(
         val classes = targetClassOf.values.toSeq.distinct
         val base = triples.filter($"pred" === Rdf.rdfType && $"obj".isin(classes: _*))
           .select($"obj".as("cls"), $"subj".as("focus")).distinct()
-        Some(if (cyclicIds.nonEmpty) base.localCheckpoint(true) else base.persist())
+        Some(if (cyclicIds.nonEmpty) checkpointed(base) else persisted(base))
       }
     val targets: Map[String, DataFrame] = schema.shapes.map { s =>
       stats.totalQueries += 1
@@ -366,7 +386,7 @@ final class Validator(
     // so persisting them only paid a cache write per frame; only cyclic
     // shapes — whose edges re-join every fixpoint round — pin them.
     def pinEdges(id: String, df: DataFrame): DataFrame =
-      if (cyclicIds.contains(id)) df.localCheckpoint(true) else df
+      if (cyclicIds.contains(id)) checkpointed(df) else df
     val refMinEdges: Map[String, Seq[(CardConstraint, DataFrame)]] = schema.shapes.map { s =>
       s.id -> s.minConstraints.filter(_.shapeRef.isDefined).map { c =>
         val e = refEdges(c, targets.getOrElse(c.shapeRef.get, emptyFocus()))
@@ -547,11 +567,11 @@ final class Validator(
         // target filtering for recursive shapes too (Validation.py:101-110).
         val inv0dOpt: Map[String, Option[DataFrame]] = scc.map { id =>
           id -> combineInv0(invalid0parts(id) ++ a10Prune(schema.byId(id)))
-            .map(_.localCheckpoint(true))
+            .map(checkpointed)
         }.toMap
         def inv0d(id: String): DataFrame = inv0dOpt(id).getOrElse(emptyFocus())
         scc.foreach { id =>
-          state(id) = ShapeVerdict(targets(id), inv0d(id), emptyMarked().localCheckpoint(true))
+          state(id) = ShapeVerdict(targets(id), inv0d(id), checkpointed(emptyMarked()))
         }
         var sizes = scc.map(id => (state(id).strictValid.count(), state(id).invalid.count()))
         var converged = false
@@ -560,9 +580,12 @@ final class Validator(
           iter += 1
           stats.fixpointIterations += 1
           val updated = scc.map { id =>
-            id -> evalShape(schema.byId(id), inv0dOpt(id)).localCheckpoint(true)
+            id -> checkpointed(evalShape(schema.byId(id), inv0dOpt(id)))
           }
+          // the new round is materialized and reads nothing of the one it
+          // replaces, so the old round's blocks go now, not at result release
           updated.foreach { case (id, marked) =>
+            unpin(state(id).marked)
             state(id) = ShapeVerdict(targets(id), inv0d(id), marked)
           }
           val newSizes = scc.map(id => (state(id).strictValid.count(), state(id).invalid.count()))
@@ -574,6 +597,6 @@ final class Validator(
     }
 
     stats.evalMs = (System.nanoTime() - t0) / 1000000L - stats.planMs
-    ValidationResult(state.toMap, nodeOrder, stats, sharedCached = sharedScan.toSeq)
+    ValidationResult(state.toMap, nodeOrder, stats, pinned.toSeq)
   }
 }

@@ -37,6 +37,18 @@ class EntityLinkerParitySpec extends SparkTestBase {
     assert(local.keySet == messy.toSet) // every input surface covered
   }
 
+  test("representative length counts codepoints, as Spark's length does") {
+    // the two surfaces link (shared tokens "acme", "widgets"); by UTF-16
+    // units the emoji surface is longer (17 vs 16), by codepoints shorter
+    // (15 vs 16), so the representative depends on the length measure
+    val pair = Seq("acme widgets \uD83D\uDE00\uD83D\uDE00", "acme widgets abc")
+    val surfaces = pair.toDF("surface")
+    val local = linkMap(EntityLinker.link(spark, surfaces))
+    val dist = linkMap(EntityLinker.link(spark, surfaces, localThreshold = 0L))
+    assert(dist.values.toSet == Set("acme widgets abc"), dist)
+    assert(local == dist)
+  }
+
   test("byte gate refuses oversized payloads (distributed path taken)") {
     val surfaces = (0 until 30).flatMap(Universe.aliases).distinct.toDF("surface")
     // 0-byte budget: must fall through to the distributed path and still agree
