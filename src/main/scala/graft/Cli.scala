@@ -87,9 +87,9 @@ object Cli {
 
       Report.writeVerdicts(spark, result, outDir, ordered = orderBy)
       Report.writeTraces(spark, result, outDir)
-      if (outputs) Report.writeTargetLogs(result, outDir)
+      if (outputs) Report.writeTargetLogs(spark, result, outDir)
       java.nio.file.Files.write(java.nio.file.Paths.get(s"$outDir/validationReport.ttl"),
-        Report.validationReportTtl(result).getBytes("UTF-8"))
+        Report.validationReportTtl(spark, result).getBytes("UTF-8"))
       val stats = Report.statsText(spark, result)
       java.nio.file.Files.write(java.nio.file.Paths.get(s"$outDir/stats.txt"), stats.getBytes("UTF-8"))
       java.nio.file.Files.write(java.nio.file.Paths.get(s"$outDir/validation.log"),

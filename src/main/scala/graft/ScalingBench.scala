@@ -71,7 +71,8 @@ object ScalingBench {
         // bench split size must reproduce that splits >> cores regime for
         // the SMALLEST hot input. 32m still left the 587 MB facts read at
         // only 19 splits = 2.4 waves on 8 cores (last-wave idle ≈ 12%);
-        // 16m → 37 splits ≥ 4 waves. TriplesStageProbe A/B at 8 threads:
+        // 16m → 37 splits ≥ 4 waves. A/B at 8 threads with the
+        // TriplesStageProbe scratch main (since removed):
         // stage 51.9/53.5 s (32m, quiet host) vs 40.7/43.6 s (16m) — both
         // 16m reps beat every 32m rep; 2-thread leg is wave-insensitive.
         .config("spark.sql.files.maxPartitionBytes", "16m")

@@ -22,8 +22,7 @@ import org.apache.spark.sql.SparkSession
   *    parallelism where inputs are small relative to the core count.
   *
   * Each value is applied ONLY when the session still carries the stock
-  * default (a user's explicit setting always wins), and
-  * `SPARK_GRAFT_NO_SESSION_TUNING=1` disables the whole mechanism.
+  * default (a user's explicit setting always wins).
   *
   * `spark.sql.adaptive.coalescePartitions.parallelismFirst` was briefly set
   * false here (Spark's doc recommendation for byte-heavy shuffles) and
@@ -47,7 +46,6 @@ object Tuning {
   private def norm(s: String): String = s.trim.toLowerCase.stripSuffix("b")
 
   def sessionDefaults(spark: SparkSession): Unit = {
-    if (sys.env.get("SPARK_GRAFT_NO_SESSION_TUNING").contains("1")) return
     tuned.foreach { case (key, stock, value) =>
       if (spark.conf.getOption(key).forall(v => norm(v) == norm(stock)))
         spark.conf.set(key, value)

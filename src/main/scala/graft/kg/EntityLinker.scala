@@ -68,7 +68,7 @@ object EntityLinker {
       "id", "text", params.minTokenLen)
     // ONE document-frequency aggregation serves BOTH the stopword filter
     // and the TF-IDF weights (r06 — previously two full aggs over the
-    // token frame: one for stopTokens, one inside tfidf). df per token is
+    // token frame: one for stopTokens, one for the weights). df per token is
     // identical computed before or after stopword removal (dropping other
     // tokens' rows cannot change a surviving token's document count), so
     // filtering AFTER the df join preserves the exact weights.
@@ -83,8 +83,8 @@ object EntityLinker {
     val cand = TextSim.candidatePairs(
       TextSim.lshBands(sig, params.minHashFunctions, params.rowsPerBand), params.bucketCap)
 
-    // TF-IDF weights straight from the carried df column (same formula as
-    // TextSim.tfidf, minus its second aggregation + join)
+    // TF-IDF weights straight from the carried df column:
+    // w = ln((n + 1) / (df + 1)) + 1 (set semantics, tf ∈ {0,1})
     val weights = tok
       .withColumn("w", log((lit(n) + 1.0) / (col("df") + 1.0)) + 1.0)
       .select(col("id"), col("token"), col("w"))

@@ -8,30 +8,6 @@ import org.apache.spark.sql.functions._
   * "batched regex/gazetteer mention detection per turn").
   */
 object Extraction {
-  /** A mention: one or more capitalized tokens (optionally dotted initials). */
-  val MentionRe = "[A-Z][A-Za-z0-9]*\\.?(?: [A-Z][A-Za-z0-9]*\\.?)*"
-
-  private val relTriggerToPred = Map(
-    "works at" -> Universe.relWorksAt,
-    "collaborates with" -> Universe.relCollab,
-    "contributes to" -> Universe.relContrib)
-  private val kindWordToClass = Map(
-    "person" -> Universe.clsPerson,
-    "organization" -> Universe.clsOrg,
-    "project" -> Universe.clsProject)
-
-  /** One combined pattern so relation and type facts come from a single
-    * regex pass over the corpus — the transcript scan is the dominant
-    * data-volume stage and must not run twice. */
-  private val factPattern =
-    s"($MentionRe) (${(relTriggerToPred.keys.toSeq :+ "is a").sorted.mkString("|")}) " +
-      s"($MentionRe|${kindWordToClass.keys.toSeq.sorted.mkString("|")}) \\."
-
-  /** All mention surfaces per turn: (conv_id, turn_idx, surface). */
-  def mentions(turns: DataFrame): DataFrame =
-    turns.select(col("conv_id"), col("turn_idx"),
-      explode(regexp_extract_all(col("text"), lit(MentionRe), lit(0))).as("surface"))
-
   /** Canonical small-integer fact codes, shared by the compact extraction
     * output and the pipeline's dictionary encoding:
     * pid 0 = rdf:type, then the relation predicates in declaration order;
@@ -44,6 +20,16 @@ object Extraction {
 
   private val triggerToPid = Map("works at" -> 1, "collaborates with" -> 2, "contributes to" -> 3)
   private val kindWordToClsIdx = Map("person" -> 1, "organization" -> 2, "project" -> 3)
+
+  /** A mention: one or more capitalized tokens (optionally dotted initials). */
+  private val MentionRe = "[A-Z][A-Za-z0-9]*\\.?(?: [A-Z][A-Za-z0-9]*\\.?)*"
+
+  /** One combined pattern so relation and type facts come from a single
+    * regex pass over the corpus — the transcript scan is the dominant
+    * data-volume stage and must not run twice. */
+  private val factPattern =
+    s"($MentionRe) (${(triggerToPid.keys.toSeq :+ "is a").sorted.mkString("|")}) " +
+      s"($MentionRe|${kindWordToClsIdx.keys.toSeq.sorted.mkString("|")}) \\."
 
   private def mapLitInt(m: Map[String, Int]) =
     map(m.toSeq.sortBy(_._1).flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
@@ -61,17 +47,16 @@ object Extraction {
     * non-overlapping match, then the (short) matched sentences are exploded
     * and re-captured per group — the full-corpus regex scan runs exactly
     * once, the per-group extracts only touch ~60-char match strings. */
-  def factsCompact(turns: DataFrame): DataFrame = factsCompactWith(turns, Nil)
-
-  def factsCompactWith(turns: DataFrame, carry: Seq[String]): DataFrame = {
-    val keyCols = Seq(col("conv_id"), col("turn_idx")) ++ carry.map(col)
+  def factsCompact(turns: DataFrame): DataFrame = {
+    val keyCols = Seq(col("conv_id"), col("turn_idx"))
     // NO contains() trigger prefilter — MEASURED no longer profitable under
-    // the compact encoding (ExtractionProbe, 136M-turn ScalingBench corpus,
-    // local[8], min of 2): bare regex scan 92.9 s; contains()-prefiltered
-    // scan 95.7 s; the filter alone costs 27.6 s and only removes 27% of
-    // turns ("is a" appears in most fact-bearing turns), so the surviving
-    // 73% of bytes get scanned twice. The earlier ~10x-per-byte claim
-    // predated the single-pass `regexp_extract_all` formulation.
+    // the compact encoding (136M-turn ScalingBench corpus, local[8], min of
+    // 2, measured with the ExtractionProbe scratch main, since removed):
+    // bare regex scan 92.9 s; contains()-prefiltered scan 95.7 s; the
+    // filter alone costs 27.6 s and only removes 27% of turns ("is a"
+    // appears in most fact-bearing turns), so the surviving 73% of bytes
+    // get scanned twice. The earlier ~10x-per-byte claim predated the
+    // single-pass `regexp_extract_all` formulation.
     turns
       .select(keyCols :+
         explode(regexp_extract_all(col("text"), lit(factPattern), lit(0))).as("sent"): _*)
@@ -91,30 +76,14 @@ object Extraction {
     * (conv_id, turn_idx, subjSurface, pred, objSurface, cls) — the public
     * fact schema (pred/cls as IRIs), decoded from the integer codes with
     * literal maps (codegen'd; negligible next to the regex scan). */
-  def facts(turns: DataFrame): DataFrame = factsWith(turns, Nil)
+  def facts(turns: DataFrame): DataFrame = decode(factsCompact(turns))
 
-  /** `facts` carrying extra pass-through columns (e.g. `ts` for streaming
-    * windowed metrics). */
-  def factsWith(turns: DataFrame, carry: Seq[String]): DataFrame =
-    decode(factsCompactWith(turns, carry), Seq(col("conv_id"), col("turn_idx")) ++ carry.map(col))
-
-  /** Decode a compact fact frame to the IRI-typed public schema. */
-  def decode(compact: DataFrame, keyCols: Seq[org.apache.spark.sql.Column]): DataFrame = {
+  private def decode(compact: DataFrame): DataFrame = {
     val predOf = map(predsInOrder.zipWithIndex.flatMap { case (p, i) => Seq(lit(i), lit(p)) }: _*)
     val clsOf = map(classesInOrder.zipWithIndex.flatMap { case (c, i) => Seq(lit(i + 1), lit(c)) }: _*)
-    compact.select(keyCols ++ Seq(col("subjSurface"),
+    compact.select(col("conv_id"), col("turn_idx"), col("subjSurface"),
       element_at(predOf, col("pid")).as("pred"),
       col("objSurface"),
-      when(col("clsIdx").isNotNull, element_at(clsOf, col("clsIdx"))).as("cls")): _*)
+      when(col("clsIdx").isNotNull, element_at(clsOf, col("clsIdx"))).as("cls"))
   }
-
-  /** Binary relations view over `facts`. */
-  def relations(turns: DataFrame): DataFrame =
-    facts(turns).filter(col("pred") =!= graft.rdf.Rdf.rdfType)
-      .select(col("conv_id"), col("turn_idx"), col("subjSurface"), col("pred"), col("objSurface"))
-
-  /** rdf:type assertion view over `facts`. */
-  def typeAssertions(turns: DataFrame): DataFrame =
-    facts(turns).filter(col("pred") === graft.rdf.Rdf.rdfType)
-      .select(col("conv_id"), col("turn_idx"), col("subjSurface"), col("cls"))
 }

@@ -19,9 +19,8 @@ import org.apache.spark.sql.functions._
   *  - hub entities in the fact→id joins (a popular alias can appear in a
   *    large fraction of all facts): AQE skew-join splitting
   *    (spark.sql.adaptive.skewJoin, on in every entry point) splits the hot
-  *    partitions; `graft.ops.Skew` provides explicit salting primitives for
-  *    engines running without AQE;
-  *  - per-key aggregations (surface dedup, triple distinct, tfidf document
+  *    partitions;
+  *  - per-key aggregations (surface dedup, triple distinct, TF-IDF document
   *    frequencies) are safe by construction: partial (map-side) aggregation
   *    collapses hub keys before the shuffle, and dedup shuffles key on the
   *    whole row — no hot keys;

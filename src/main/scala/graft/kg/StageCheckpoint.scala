@@ -3,7 +3,7 @@ package graft.kg
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 /** Stage-level checkpointing with per-partition lineage + counters (north
@@ -27,19 +27,6 @@ final class StageCheckpoint(spark: SparkSession, baseDir: String) {
 
   private def lineagePath(name: String) = Paths.get(s"$baseDir/$name.lineage.json")
   private def dataPath(name: String) = s"$baseDir/$name.parquet"
-
-  /** Row count + order-insensitive content checksum + per-partition counts —
-    * ONE pass: aggregate per partition id, derive totals on the driver.
-    * Retained as the standalone (re-)fingerprint of an already-persisted
-    * stage; the hot path in [[stage]] rides the write instead (see there). */
-  def fingerprint(df: DataFrame): StageLineage = {
-    val parts = df.groupBy(spark_partition_id().as("p"))
-      .agg(count(lit(1)).as("n"),
-        coalesce(bit_xor(xxhash64(df.columns.map(col): _*)), lit(0L)).as("h"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq.sortBy(_._1)
-    StageLineage(parts.map(_._2).sum, parts.map(_._3).fold(0L)(_ ^ _),
-      parts.map(p => (p._1, p._2)))
-  }
 
   /** Per-output-file row counts from the parquet FOOTERS — pure driver-side
     * metadata reads (a few KB per file), no data scan. Files are numbered in
@@ -79,6 +66,10 @@ final class StageCheckpoint(spark: SparkSession, baseDir: String) {
     * checkpoint, not the computation. */
   def stage(name: String, params: String = "")(compute: => DataFrame): DataFrame = {
     if (!isComplete(name, params)) {
+      // The old lineage goes BEFORE its parquet is overwritten: if this run
+      // dies mid-write, a rerun must not find a lineage that vouches for a
+      // deleted or half-written output.
+      Files.deleteIfExists(lineagePath(name))
       val t0 = System.nanoTime()
       val df = compute
       // Lineage metrics RIDE THE WRITE (zero extra passes): count + the
@@ -103,7 +94,10 @@ final class StageCheckpoint(spark: SparkSession, baseDir: String) {
         s"""{"stage":"$name","params_sig":${paramsSig(params)},"rows":${lin.rows},"checksum":${lin.checksum},
            |"partitions":${lin.partitions.map { case (p, c) => s"""{"id":$p,"rows":$c}""" }.mkString("[", ",", "]")}}"""
           .stripMargin.replace("\n", "")
-      Files.write(lineagePath(name), json.getBytes("UTF-8"))
+      // temp file + atomic rename: a lineage file is either whole or absent
+      val tmp = Paths.get(s"$baseDir/.$name.lineage.tmp")
+      Files.write(tmp, json.getBytes("UTF-8"))
+      Files.move(tmp, lineagePath(name), StandardCopyOption.ATOMIC_MOVE)
     }
     spark.read.parquet(dataPath(name))
   }

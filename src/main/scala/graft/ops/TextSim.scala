@@ -144,15 +144,6 @@ object TextSim {
       .dropDuplicates("a", "b")
   }
 
-  /** TF-IDF weights from an exploded (id, token) frame (set semantics — the
-    * frame is distinct, so tf ∈ {0,1}; right for short surface forms). */
-  def tfidf(tok: DataFrame, numDocs: Long): DataFrame = {
-    val df_ = tok.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    tok.join(df_, "token")
-      .withColumn("w", log((lit(numDocs) + 1.0) / (col("df") + 1.0)) + 1.0)
-      .select(col("id"), col("token"), col("w"))
-  }
-
   /** Cosine similarity for the given candidate pairs over TF-IDF weights:
     * dot products via a token-level join, norms via per-id aggregation.
     *

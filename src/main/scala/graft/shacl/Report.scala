@@ -100,41 +100,44 @@ object Report {
   }
 
   /** `targets_valid.log` / `targets_violated.log` parity
-    * (Validation.write_targets_to_file): `Shape(<instance>),` lines. Rows
+    * (Validation.write_targets_to_file): `Shape(<instance>),` lines, sorted
+    * by (shape, focus). Both logs come from ONE `orderBy("shape", "focus")`
+    * pass over [[verdictFrame]]: each row goes to its verdict's file. Rows
     * stream through `toLocalIterator` (one partition in driver memory at a
-    * time) and stop at `maxLines` — the reference collects everything, which
-    * is a driver OOM at scale; callers needing the full set use the parquet
-    * verdict table. */
-  def writeTargetLogs(result: ValidationResult, outDir: String,
+    * time) and each file stops at `maxLines` — the reference collects
+    * everything, which is a driver OOM at scale; callers needing the full
+    * set use the parquet verdict table. */
+  def writeTargetLogs(spark: SparkSession, result: ValidationResult, outDir: String,
                       maxLines: Long = 1000000L): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    def writeLog(file: String, get: ShapeVerdict => DataFrame): Unit = {
-      val out = java.nio.file.Files.newBufferedWriter(
-        java.nio.file.Paths.get(s"$outDir/$file"), java.nio.charset.StandardCharsets.UTF_8)
-      try {
-        var n = 0L
-        var first = true
-        for ((shapeId, v) <- result.verdicts.toSeq.sortBy(_._1) if n < maxLines) {
-          val it = get(v).orderBy("focus").toLocalIterator()
-          while (it.hasNext && n < maxLines) {
-            val line = s"$shapeId(${it.next().getString(0)}),"
-            if (!first) out.write("\n")
-            out.write(line); first = false; n += 1
-          }
+    val writers = Seq("valid", "violated").map { verdict =>
+      verdict -> java.nio.file.Files.newBufferedWriter(
+        java.nio.file.Paths.get(s"$outDir/targets_$verdict.log"), java.nio.charset.StandardCharsets.UTF_8)
+    }.toMap
+    val lines = scala.collection.mutable.Map("valid" -> 0L, "violated" -> 0L)
+    try {
+      val it = verdictFrame(spark, result).orderBy("shape", "focus").toLocalIterator()
+      while (it.hasNext && lines.values.exists(_ < maxLines)) {
+        val r = it.next()
+        val verdict = r.getString(2)
+        val n = lines(verdict)
+        if (n < maxLines) {
+          if (n > 0) writers(verdict).write("\n")
+          writers(verdict).write(s"${r.getString(0)}(${r.getString(1)}),")
+          lines(verdict) = n + 1
         }
-      } finally out.close()
-    }
-    writeLog("targets_valid.log", _.validFinal)
-    writeLog("targets_violated.log", _.invalid)
+      }
+    } finally writers.values.foreach(_.close())
   }
 
-  /** SHACL validation report TTL (Validation.py:609-627). The violation list
-    * is collected to the driver with a hard cap — reports are meant for
-    * human consumption; at scale use the parquet verdict table instead. */
-  def validationReportTtl(result: ValidationResult, maxResults: Int = 10000): String = {
-    val violations = result.verdicts.toSeq.sortBy(_._1).flatMap { case (shapeId, v) =>
-      v.invalid.limit(maxResults).collect().map(r => (shapeId, r.getString(0)))
-    }
+  /** SHACL validation report TTL (Validation.py:609-627), from ONE
+    * [[summarize]] action: shapes in id order, each shape's first
+    * `maxResults` violating foci in Spark's focus order. The cap keeps the
+    * report human-sized; at scale use the parquet verdict table instead. */
+  def validationReportTtl(spark: SparkSession, result: ValidationResult,
+                          maxResults: Int = 10000): String = {
+    val summary = summarize(spark, result, maxResults).toSeq.sortBy(_._1)
+    val violations = summary.flatMap { case (shapeId, s) => s.violatedFoci.map(shapeId -> _) }
     val sb = new StringBuilder("@prefix sh: <http://www.w3.org/ns/shacl#> . \n\n")
     if (violations.isEmpty) sb.append(":report a sh:ValidationReport ;\n  sh:conforms true ")
     else {

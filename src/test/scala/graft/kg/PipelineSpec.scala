@@ -110,4 +110,27 @@ class PipelineSpec extends SparkTestBase {
     assert(json.contains("\"partitions\":["))
     assert(ckpt.counters("demo") == 100L)
   }
+
+  test("a failed rewrite under a new signature does not leave the old checkpoint looking complete") {
+    val dir = java.nio.file.Files.createTempDirectory("kgrewrite").toString
+    val ckpt = new StageCheckpoint(spark, dir)
+    val ids = ckpt.stage("s", "A") { spark.range(100).select(col("id").cast("string").as("x")) }
+    assert(ids.count() == 100L)
+
+    // the rewrite under B fails inside its write job, after the overwrite
+    // has started
+    intercept[Exception] {
+      ckpt.stage("s", "B") {
+        spark.range(100).select(
+          when(col("id") === 50, raise_error(lit("boom"))).otherwise(col("id").cast("string")).as("x"))
+      }
+    }
+    assert(!ckpt.isComplete("s", "A"), "lineage still vouches for the overwritten parquet")
+
+    // the rerun under A recomputes instead of reading the broken output
+    val again = ckpt.stage("s", "A") { spark.range(100).select(col("id").cast("string").as("x")) }
+    assert(again.count() == 100L)
+    assert(ckpt.isComplete("s", "A"))
+    assert(ckpt.counters == Map("s" -> 100L))
+  }
 }

@@ -24,4 +24,35 @@ class ReportSpec extends SparkTestBase {
         assert(log.contains(line), log)
     } finally result.unpersist()
   }
+
+  test("validationReportTtl and writeTargetLogs carry the LUBM verdicts, capped per file") {
+    val triples = TripleStore.fromTurtleFile(spark, resource("lubm/LUBM.ttl"))
+    val result = new Validator(spark, triples, ShapeParser.parseDir(resource("lubm/shapes"))).run()
+    try {
+      def pairs(verdict: ShapeVerdict => org.apache.spark.sql.DataFrame): Seq[(String, String)] =
+        result.verdicts.toSeq.flatMap { case (id, v) => verdict(v).collect().map(r => (id, r.getString(0))) }.sorted
+      val valid = pairs(_.validFinal)
+      val invalid = pairs(_.invalid)
+      assert(valid.size == 14 && invalid.size == 9)
+
+      val ttl = Report.validationReportTtl(spark, result)
+      assert(ttl.contains("sh:conforms false"))
+      val reported = """sh:focusNode  <([^>]*)> ;\s*sh:sourceShape  <([^>]*)>""".r
+        .findAllMatchIn(ttl).map(m => (m.group(2), m.group(1))).toSeq
+      assert(reported.sorted == invalid)
+
+      val dir = java.nio.file.Files.createTempDirectory("reportlogs").toString
+      def log(verdict: String): Seq[String] = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$dir/targets_$verdict.log")), "UTF-8").split("\n").toSeq
+      def lines(ps: Seq[(String, String)]): Seq[String] = ps.map { case (id, focus) => s"$id($focus)," }
+      Report.writeTargetLogs(spark, result, dir)
+      assert(log("valid") == lines(valid))
+      assert(log("violated") == lines(invalid))
+
+      Report.writeTargetLogs(spark, result, dir, maxLines = 5)
+      assert(log("valid") == lines(valid).take(5))
+      assert(log("violated") == lines(invalid).take(5))
+    } finally result.unpersist()
+  }
 }
+
