@@ -26,16 +26,10 @@ object TripleStore {
     spark.read.parquet(path).select(col("subj"), col("pred"), col("obj"))
 
   /** Materialize a triple table for repeated validation queries. Predicate
-    * partitioning → directory pruning on `filter(pred === …)`; bucketing by
-    * subject → shuffle-free `groupBy(subj)` when read back as a table. */
-  def writePartitioned(df: DataFrame, path: String, buckets: Int = 0): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite).partitionBy("pred")
-    w.parquet(path)
-    // Note: bucketBy requires saveAsTable (a metastore); for pure-path
-    // parquet we rely on predicate partitioning + AQE. Callers with a
-    // catalog can use writeBucketedTable instead.
-    val _ = buckets
-  }
+    * partitioning → directory pruning on `filter(pred === …)`. Bucketing by
+    * subject needs a catalog table: see [[writeBucketedTable]]. */
+  def writePartitioned(df: DataFrame, path: String): Unit =
+    df.write.mode(SaveMode.Overwrite).partitionBy("pred").parquet(path)
 
   /** One explicit exchange on the bucket key before the bucketed write:
     * `repartition(buckets, subj)` uses the same Murmur3(subj) % buckets

@@ -78,9 +78,6 @@ final case class Shape(
     maxConstraints.filterNot(c => c.shapeRef.exists(skipped.contains))
   }
 
-  def hasCardinalityQueries: Boolean =
-    minConstraints.nonEmpty || activeMaxConstraints.nonEmpty
-
   /** True if `other` occurs in a max-cardinality constraint of this shape —
     * disables neighbor-based target filtering (Shape.is_max_ref,
     * core/Shape.py:105-108, used at Validation.py:103-104). */

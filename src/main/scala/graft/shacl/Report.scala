@@ -133,15 +133,18 @@ object Report {
   /** SHACL validation report TTL (Validation.py:609-627), from ONE
     * [[summarize]] action: shapes in id order, each shape's first
     * `maxResults` violating foci in Spark's focus order. The cap keeps the
-    * report human-sized; at scale use the parquet verdict table instead. */
+    * report human-sized; at scale use the parquet verdict table instead.
+    * `sh:conforms` comes from the exact violated counts, not the capped
+    * list. */
   def validationReportTtl(spark: SparkSession, result: ValidationResult,
                           maxResults: Int = 10000): String = {
     val summary = summarize(spark, result, maxResults).toSeq.sortBy(_._1)
+    val conforms = summary.forall(_._2.violated == 0)
     val violations = summary.flatMap { case (shapeId, s) => s.violatedFoci.map(shapeId -> _) }
     val sb = new StringBuilder("@prefix sh: <http://www.w3.org/ns/shacl#> . \n\n")
-    if (violations.isEmpty) sb.append(":report a sh:ValidationReport ;\n  sh:conforms true ")
-    else {
-      sb.append(":report a sh:ValidationReport ;\n  sh:conforms false ;\n  sh:result")
+    sb.append(s":report a sh:ValidationReport ;\n  sh:conforms $conforms ")
+    if (violations.nonEmpty) {
+      sb.append(";\n  sh:result")
       violations.zipWithIndex.foreach { case ((shapeId, focus), i) =>
         if (i != 0) sb.append(" ,")
         sb.append("\n    [ a  sh:ValidationResult ;\n")

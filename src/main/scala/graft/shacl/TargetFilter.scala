@@ -75,12 +75,4 @@ object TargetFilter {
       pending = counted.filter(!isInvalid).select($"focus"),
       invalid = counted.filter(isInvalid).select($"focus"))
   }
-
-  /** Standalone form computing the target scan itself (the reference's
-    * combined template_FILTER query shape). */
-  def extractTargetsWithFilter(spark: SparkSession, triples: DataFrame, shape: Shape,
-                               constraint: CardConstraint, refValid: DataFrame): Classified = {
-    val targets = new Validator(spark, triples, ShapeSchema(Seq(shape))).targetsOf(shape)
-    classify(spark, triples, targets, constraint, refValid)
-  }
 }

@@ -127,8 +127,9 @@ final class ValidationStats {
   *                          F iff countDistinct(obj ∈ targets(R)∖invalid(R)) < m
   *   - ref'd max m over R:  F iff countDistinct(obj ∈ strictValid(R)) ≥ m+1;
   *                          T needs countDistinct(obj ∈ targets(R)∖invalid(R)) ≤ m
-  *   - skipped max queries (same shape referenced by min AND max,
-  *     core/Shape.py:206-222): F iff valid refs on the min paths exceed the bound
+  *   - skipped max query (same shape referenced by min AND max,
+  *     core/Shape.py:206-222): a ref'd max check whose edges are the union
+  *     of the min constraints' edges to that shape
   *   - local constraints, sh:or groups and sh:sparql constraints are 2-valued.
   */
 final class Validator(
@@ -146,33 +147,27 @@ final class Validator(
   private val pinned = scala.collection.mutable.ArrayBuffer[DataFrame]()
   private def persisted(df: DataFrame): DataFrame = { pinned += df.persist(); df }
   private def checkpointed(df: DataFrame): DataFrame = { val c = df.localCheckpoint(true); pinned += c; c }
-  private def unpin(df: DataFrame): Unit = { pinned -= df; ValidationResult.release(df) }
+  /** Release a frame this run pinned; one it never pinned is left alone. */
+  private def unpin(df: DataFrame): Unit =
+    if (pinned.contains(df)) { pinned -= df; ValidationResult.release(df) }
 
   /** Edges for a path: (focus, o) — see [[PathAlgebra.edges]] (shared with
     * A10 target pre-filtering so both sides agree on path semantics). */
   private def pathEdges(path: PathExpr): DataFrame =
     PathAlgebra.edges(triples, path, config.expandSequencePaths)
 
-  /** A1/A3 target scan. A custom target query (`sh:targetQuery` / JSON
+  /** A1/A3 target class. A custom target query (`sh:targetQuery` / JSON
     * `targetDef.query`) takes precedence over `sh:targetClass` — the
     * restricted `?x a <C>` pattern compiles to the same scan; anything else
     * is rejected loudly (reference ships arbitrary SPARQL to the endpoint,
     * a documented non-goal here). Node-target shapes carry no target query
     * and are skipped for target retrieval (reference Validation.py:97-98). */
-  def targetsOf(shape: Shape): DataFrame = {
-    val cls = shape.targetQuery match {
-      case Some(q) =>
-        Some(TargetQuery.compile(q).getOrElse(sys.error(
-          s"shape ${shape.id}: unsupported target query (only " +
-            s"'SELECT ?x WHERE { ?x a <C> }' is compilable): $q")))
-      case None => shape.targetClass
-    }
-    cls match {
-      case Some(c) =>
-        triples.filter($"pred" === Rdf.rdfType && $"obj" === c)
-          .select($"subj".as("focus")).distinct()
-      case None => spark.emptyDataset[String].toDF("focus")
-    }
+  private def targetClass(shape: Shape): Option[String] = shape.targetQuery match {
+    case Some(q) =>
+      Some(TargetQuery.compile(q).getOrElse(sys.error(
+        s"shape ${shape.id}: unsupported target query (only " +
+          s"'SELECT ?x WHERE { ?x a <C> }' is compilable): $q")))
+    case None => shape.targetClass
   }
 
   /** A15 (opt-in): lexical-form datatype check over the string-typed object
@@ -284,6 +279,10 @@ final class Validator(
   private def refEdges(c: CardConstraint, refTargets: DataFrame): DataFrame =
     constraintEdges(c).join(refTargets.withColumnRenamed("focus", "o"), Seq("o"), "left_semi")
 
+  /** One inter-shape cardinality check of a shape: `edges` into shape `ref`
+    * compared against `bound`, as a min check (`isMin`) or a max check. */
+  private final case class RefCheck(ref: String, isMin: Boolean, bound: Int, edges: DataFrame)
+
   /** Topological order over the SCC condensation, choosing among ready SCCs
     * the one whose earliest member appears first in the traversal's node
     * order — the B5 evaluation order reaches execution (it schedules
@@ -328,23 +327,19 @@ final class Validator(
     def pin(id: String, df: DataFrame): DataFrame =
       if (cyclicIds.contains(id)) checkpointed(df) else persisted(df)
 
-    // Static per-shape artifacts. With enough shapes, ALL target scans
-    // share ONE type-scan + distinct over (class, subj) — per-shape target
-    // sets become lazy filters of the single cached frame, so a 50-shape
-    // schema pays one shuffle for target retrieval instead of 50. Small
-    // schemas keep per-shape scans (the narrower obj===cls pushdown beats
-    // the shared frame's bookkeeping when there is nothing to amortize —
-    // measured ~20% on the 2-shape bench schema).
-    val targetClassOf: Map[String, String] = schema.shapes.flatMap { s =>
-      val cls = s.targetQuery match {
-        case Some(q) => TargetQuery.compile(q)
-        case None => s.targetClass
-      }
-      cls.map(s.id -> _)
-    }.toMap
-    val useSharedScan = targetClassOf.size >= 4
+    // Static per-shape artifacts. With 4 or more target classes, ALL target
+    // scans share ONE type-scan + distinct over (class, subj) — per-shape
+    // target sets become lazy filters of the single pinned frame. On LUBM
+    // (5 target classes; `perfbench/run.py --trace 1`, seed 1) per-shape
+    // scans instead raised `lubm.request.jobs` from 178 to 207,
+    // `lubm.validator_run.jobs` from 66 to 76 and the request from 10.6 s
+    // to 11.3 s. Small schemas keep per-shape scans (the narrower
+    // obj===cls pushdown beats the shared frame's bookkeeping when there
+    // is nothing to amortize — measured ~20% on the 2-shape bench schema).
+    val targetClassOf: Map[String, String] =
+      schema.shapes.flatMap(s => targetClass(s).map(s.id -> _)).toMap
     val sharedScan: Option[DataFrame] =
-      if (!useSharedScan) None
+      if (targetClassOf.size < 4) None
       else {
         val classes = targetClassOf.values.toSeq.distinct
         val base = triples.filter($"pred" === Rdf.rdfType && $"obj".isin(classes: _*))
@@ -355,7 +350,10 @@ final class Validator(
       stats.totalQueries += 1
       val frame = (sharedScan, targetClassOf.get(s.id)) match {
         case (Some(scan), Some(c)) => scan.filter($"cls" === c).select($"focus")
-        case _ => pin(s.id, targetsOf(s))
+        case (None, Some(c)) =>
+          pin(s.id, triples.filter($"pred" === Rdf.rdfType && $"obj" === c)
+            .select($"subj".as("focus")).distinct())
+        case (_, None) => pin(s.id, emptyFocus())
       }
       s.id -> frame
     }.toMap
@@ -374,86 +372,75 @@ final class Validator(
       s.id -> Seq(localCardInvalid(s, t), orInvalid(s, t), sparqlInvalid(s, t)).flatten
     }.toMap
 
-    // ref-constraint edge sets, computed once (joined against evolving
-    // verdicts). With `selective` the evaluation is nested inside the
-    // shape's target set (A7); either way no dedup — counts are distinct.
-    // Acyclic shapes consume their edges exactly once, so only cyclic
-    // shapes (whose edges re-join every fixpoint round) pin them.
-    def targetRestrict(df: DataFrame, shapeId: String): DataFrame =
-      selectiveRestrict(df, targets(shapeId))
-    // r06: acyclic shapes consume each ref-edge frame exactly once (their
-    // evalShape runs once and each constraint's edges feed one joinStats),
-    // so persisting them only paid a cache write per frame; only cyclic
-    // shapes — whose edges re-join every fixpoint round — pin them.
-    def pinEdges(id: String, df: DataFrame): DataFrame =
-      if (cyclicIds.contains(id)) checkpointed(df) else df
-    val refMinEdges: Map[String, Seq[(CardConstraint, DataFrame)]] = schema.shapes.map { s =>
-      s.id -> s.minConstraints.filter(_.shapeRef.isDefined).map { c =>
-        val e = refEdges(c, targets.getOrElse(c.shapeRef.get, emptyFocus()))
-        (c, pinEdges(s.id, targetRestrict(e, s.id)))
+    // Reference checks per shape: ref'd min, ref'd max, then skipped max
+    // (the order fixes evalShape's join order). A skipped max counts the
+    // edges of the min constraints to the same shape (Validation.py:317-325
+    // counts atoms from min query bindings), so its edge set is never empty.
+    // With `selective` the edges are nested inside the shape's target set
+    // (A7); either way no dedup — counts are distinct. Acyclic shapes read
+    // their edges once (r06: persisting them only paid a cache write), so
+    // only cyclic shapes, whose edges re-join every round, pin them.
+    val refChecks: Map[String, Seq[RefCheck]] = schema.shapes.map { s =>
+      def check(ref: String, isMin: Boolean, bound: Int, cs: Seq[CardConstraint]): RefCheck = {
+        val e = selectiveRestrict(
+          cs.map(refEdges(_, targets.getOrElse(ref, emptyFocus()))).reduce(_ union _), targets(s.id))
+        RefCheck(ref, isMin, bound, if (cyclicIds.contains(s.id)) checkpointed(e) else e)
       }
+      val refMins = s.minConstraints.filter(_.shapeRef.isDefined)
+      s.id -> (
+        refMins.map(c => check(c.shapeRef.get, isMin = true, c.min, Seq(c))) ++
+          s.activeMaxConstraints.filter(_.shapeRef.isDefined)
+            .map(c => check(c.shapeRef.get, isMin = false, c.max, Seq(c))) ++
+          s.maxValidRefs.toSeq.map { case (ref, bound) =>
+            check(ref, isMin = false, bound, refMins.filter(_.shapeRef.contains(ref)))
+          })
     }.toMap
-    val refMaxEdges: Map[String, Seq[(CardConstraint, DataFrame)]] = schema.shapes.map { s =>
-      s.id -> s.activeMaxConstraints.filter(_.shapeRef.isDefined).map { c =>
-        val e = refEdges(c, targets.getOrElse(c.shapeRef.get, emptyFocus()))
-        (c, pinEdges(s.id, targetRestrict(e, s.id)))
-      }
-    }.toMap
-    // Skipped max queries: bound enforced over the min constraints' paths
-    // referencing the same shape (Validation.py:317-325 counts atoms from min
-    // query bindings, deduplicated per referenced instance).
-    val skippedMaxEdges: Map[String, Seq[(String, Int, DataFrame)]] = schema.shapes.map { s =>
-      s.id -> s.maxValidRefs.toSeq.map { case (refShape, bound) =>
-        val minPaths = s.minConstraints.filter(_.shapeRef.contains(refShape))
-        val e = minPaths.map(c => refEdges(c, targets.getOrElse(refShape, emptyFocus())))
-          .reduceOption(_ union _).getOrElse(emptyFocus().withColumn("o", lit("")))
-        (refShape, bound, pinEdges(s.id, targetRestrict(e, s.id)))
-      }
-    }.toMap
-    stats.totalQueries += refMinEdges.valuesIterator.map(_.size).sum +
-      refMaxEdges.valuesIterator.map(_.size).sum +
-      skippedMaxEdges.valuesIterator.map(_.size).sum
+    stats.totalQueries += refChecks.valuesIterator.map(_.size).sum
     stats.planMs = (System.nanoTime() - t0) / 1000000L
 
     // Verdict state (T = strictValid, F = invalid), evolving per SCC.
     val state = scala.collection.mutable.Map[String, ShapeVerdict]()
     def curT(id: String): DataFrame = state.get(id).map(_.strictValid).getOrElse(emptyFocus())
-    def emptyMarked(): DataFrame =
+    val emptyMarked: DataFrame =
       spark.emptyDataset[(String, Boolean, Boolean)].toDF("focus", "__isF", "__isT")
 
     /** One evaluation pass of shape `s` against the current T/F state:
       * returns `marked(focus, __isF, __isT)` over `targets ∖ inv0d`.
       * (An empty inv0d costs nothing extra: AQE's empty-relation
-      * propagation eliminates the anti-join at runtime.) */
+      * propagation eliminates the anti-join at runtime.)
+      *
+      * One aggregation per reference check: left-join the referenced
+      * shape's T/F verdict sets onto the typed edges and aggregate cntT,
+      * cntF and the total typed-object count together (distinct counts —
+      * edges are not pre-deduplicated). nonF = tot - cntF.
+      *  - min check: F iff nonF < bound; T iff cntT >= bound.
+      *  - max check: F iff cntT > bound; T iff nonF <= bound — a monotone
+      *    T-guard: proven valid only once the bound can no longer be
+      *    exceeded (cntT grows towards nonF; without it a focus proven T
+      *    early could flip to F later — non-monotone, diverging from the
+      *    reference where an inferred head is never re-negated).
+      *
+      * Written as an EXPLICIT two-level aggregation — dedup (focus, o)
+      * carrying the T/F flags, then plain counts — instead of three
+      * `countDistinct` calls: multiple distinct aggregates plan through
+      * an Expand that triples every edge row before the shuffle (opt r06,
+      * guide §2.3 "shuffle fewer bytes"; both bench plans carried
+      * `Expand [3 projections]`). Equivalence: the flags depend only on
+      * `o` (semi-set membership), so they are constant across duplicate
+      * (focus, o) rows and `max` preserves them through the dedup;
+      * `count(when(flag, o))` over deduped rows ≡ countDistinct of the
+      * flagged objects (o is never null on a path edge, and `count($"o")`
+      * ≡ countDistinct(o) after dedup either way). */
     def evalShape(s: Shape, inv0d: Option[DataFrame]): DataFrame = {
       var cur = inv0d.fold(targets(s.id))(d => targets(s.id).join(d, Seq("focus"), "left_anti"))
       val fConds = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Column]()
       val tConds = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Column]()
-      var idx = 0
-
-      /** One aggregation per ref constraint: left-join the referenced
-        * shape's T/F verdict sets onto the typed edges and aggregate cntT,
-        * cntF and the total typed-object count together (distinct counts —
-        * edges are not pre-deduplicated). nonF = tot - cntF.
-        *
-        * Written as an EXPLICIT two-level aggregation — dedup (focus, o)
-        * carrying the T/F flags, then plain counts — instead of three
-        * `countDistinct` calls: multiple distinct aggregates plan through
-        * an Expand that triples every edge row before the shuffle (opt r06,
-        * guide §2.3 "shuffle fewer bytes"; both bench plans carried
-        * `Expand [3 projections]`). Equivalence: the flags depend only on
-        * `o` (semi-set membership), so they are constant across duplicate
-        * (focus, o) rows and `max` preserves them through the dedup;
-        * `count(when(flag, o))` over deduped rows ≡ countDistinct of the
-        * flagged objects (o is never null on a path edge, and `count($"o")`
-        * ≡ countDistinct(o) after dedup either way). */
-      def joinStats(edges: DataFrame, refId: String): (String, String, String) = {
-        idx += 1
-        val (tc, fc, tot) = (s"cntT$idx", s"cntF$idx", s"tot$idx")
-        val tSet = curT(refId).withColumnRenamed("focus", "o").withColumn("__t", lit(true))
-        val fSet = state.get(refId).map(_.invalid).getOrElse(emptyFocus())
+      for ((rc, i) <- refChecks(s.id).zipWithIndex) {
+        val (tc, fc, tot) = (s"cntT${i + 1}", s"cntF${i + 1}", s"tot${i + 1}")
+        val tSet = curT(rc.ref).withColumnRenamed("focus", "o").withColumn("__t", lit(true))
+        val fSet = state.get(rc.ref).map(_.invalid).getOrElse(emptyFocus())
           .withColumnRenamed("focus", "o").withColumn("__f", lit(true))
-        val st = edges
+        val st = rc.edges
           .join(tSet, Seq("o"), "left")
           .join(fSet, Seq("o"), "left")
           .groupBy($"focus", $"o").agg(max($"__t").as("__t"), max($"__f").as("__f"))
@@ -462,36 +449,27 @@ final class Validator(
             count(when($"__f", $"o")).as(fc),
             count($"o").as(tot))
         cur = cur.join(st, Seq("focus"), "left")
-        (tc, fc, tot)
-      }
-
-      refMinEdges(s.id).foreach { case (c, e) =>
-        val (tc, fc, tot) = joinStats(e, c.shapeRef.get)
+        val cntT = coalesce(col(tc), lit(0L))
         val nonF = coalesce(col(tot), lit(0L)) - coalesce(col(fc), lit(0L))
-        fConds += (nonF < c.min)
-        tConds += (coalesce(col(tc), lit(0L)) >= c.min)
+        fConds += (if (rc.isMin) nonF < rc.bound else cntT > rc.bound)
+        tConds += (if (rc.isMin) cntT >= rc.bound else nonF <= rc.bound)
       }
-      refMaxEdges(s.id).foreach { case (c, e) =>
-        val (tc, fc, tot) = joinStats(e, c.shapeRef.get)
-        val nonF = coalesce(col(tot), lit(0L)) - coalesce(col(fc), lit(0L))
-        fConds += (coalesce(col(tc), lit(0L)) >= c.max + 1)
-        tConds += (nonF <= c.max)
-      }
-      skippedMaxEdges(s.id).foreach { case (refShape, bound, e) =>
-        val (tc, fc, tot) = joinStats(e, refShape)
-        val nonF = coalesce(col(tot), lit(0L)) - coalesce(col(fc), lit(0L))
-        fConds += (coalesce(col(tc), lit(0L)) > bound)
-        // monotone T-guard: proven valid only once the bound can no longer
-        // be exceeded (cntT grows towards nonF; without this a focus proven
-        // T early could flip to F later — non-monotone, diverging from the
-        // reference where an inferred head is never re-negated)
-        tConds += (nonF <= bound)
-      }
-
       val isF = fConds.reduceOption(_ || _).getOrElse(lit(false))
       val isT = !isF && tConds.reduceOption(_ && _).getOrElse(lit(true))
       cur.withColumn("__isF", isF).withColumn("__isT", isT)
         .select($"focus", $"__isF", $"__isT")
+    }
+
+    /** The fixpoint's convergence test, ONE action over the SCC's marked
+      * frames: per shape, in SCC order, its numbers of T rows and of F
+      * rows. T and F only grow and inv0 is fixed and disjoint from marked,
+      * so equal counts mean equal T and invalid sets. */
+    def markedCounts(scc: Seq[String]): Seq[(Long, Long)] = {
+      val counted = scc.map(id => state(id).marked.select(lit(id).as("shape"), $"__isT", $"__isF"))
+        .reduce(_ union _)
+        .groupBy($"shape").agg(count(when($"__isT", 1)), count(when($"__isF", 1)))
+        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+      scc.map(counted.getOrElse(_, (0L, 0L)))
     }
 
     // shapes some other shape references — their verdict frames feed >1
@@ -540,58 +518,55 @@ final class Validator(
       try f finally spark.sparkContext.setJobDescription(null)
     }
 
+    // One loop for every SCC: the 3-valued fixpoint. T and F grow
+    // monotonically from (∅, inv0); iteration mirrors saturate_remaining
+    // (Validation.py:417-432). An acyclic SCC reads no verdict of its own,
+    // so its first round is final and it runs no convergence action.
     stats.sccCount = sccs.size
     for (scc <- sccs) {
-      if (!schema.isCyclic(scc)) {
-        val s = schema.byId(scc.head)
-        val inv0dOpt = combineInv0(invalid0parts(s.id) ++ a10Prune(s)).map(pin(s.id, _))
-        val inv0d = inv0dOpt.getOrElse(emptyFocus())
-        val marked = pin(s.id, evalShape(s, inv0dOpt))
-        // A shape with dependents is consumed from MULTIPLE downstream plan
-        // branches (each dependent's joinStats, plus the final report). If
-        // its lazily-persisted frames are still cold when those branches run
-        // concurrently inside one job, each branch recomputes the whole
-        // evaluation subtree (racing the cache) — nondeterministic 2-4×
-        // work. One cheap count materializes the cache exactly once, in
-        // dependency order; leaf shapes stay fully lazy.
-        if (referencedIds.contains(s.id))
-          labeled(s"shacl eval+pin ${s.id}")(marked.count())
-        state(s.id) = ShapeVerdict(targets(s.id), inv0d, marked)
-      } else {
-        stats.cyclicSccCount += 1
-        val tSat = System.nanoTime()
-        // 3-valued fixpoint: T and F grow monotonically from (∅, invalid0 ∪
-        // A10-pruned); iteration mirrors saturate_remaining
-        // (Validation.py:417-432). A10 runs against fully-evaluated
-        // out-of-SCC neighbors only — exactly where the reference applies
-        // target filtering for recursive shapes too (Validation.py:101-110).
-        val inv0dOpt: Map[String, Option[DataFrame]] = scc.map { id =>
-          id -> combineInv0(invalid0parts(id) ++ a10Prune(schema.byId(id)))
-            .map(checkpointed)
-        }.toMap
-        def inv0d(id: String): DataFrame = inv0dOpt(id).getOrElse(emptyFocus())
-        scc.foreach { id =>
-          state(id) = ShapeVerdict(targets(id), inv0d(id), checkpointed(emptyMarked()))
+      val cyclic = schema.isCyclic(scc)
+      val tSat = System.nanoTime()
+      // inv0 before the SCC's state is seeded: A10 sees only fully
+      // evaluated out-of-SCC neighbors, exactly where the reference applies
+      // target filtering for recursive shapes too (Validation.py:101-110)
+      val inv0dOpt: Map[String, Option[DataFrame]] = scc.map { id =>
+        id -> combineInv0(invalid0parts(id) ++ a10Prune(schema.byId(id))).map(pin(id, _))
+      }.toMap
+      def verdict(id: String, marked: DataFrame): ShapeVerdict =
+        ShapeVerdict(targets(id), inv0dOpt(id).getOrElse(emptyFocus()), marked)
+      scc.foreach(id => state(id) = verdict(id, emptyMarked))
+      val maxRounds = if (cyclic) config.maxIterations else 1
+      var counts = scc.map(_ => (0L, 0L))
+      var converged = false
+      var round = 0
+      while (!converged && round < maxRounds) {
+        round += 1
+        // every shape of a round reads the previous round's state
+        val updated = scc.map(id => id -> pin(id, evalShape(schema.byId(id), inv0dOpt(id))))
+        // a cyclic round is materialized and reads nothing of the one it
+        // replaces, so the old round's blocks go now, not at result release
+        updated.foreach { case (id, marked) =>
+          unpin(state(id).marked)
+          state(id) = verdict(id, marked)
         }
-        var sizes = scc.map(id => (state(id).strictValid.count(), state(id).invalid.count()))
-        var converged = false
-        var iter = 0
-        while (!converged && iter < config.maxIterations) {
-          iter += 1
+        if (cyclic) {
           stats.fixpointIterations += 1
-          val updated = scc.map { id =>
-            id -> checkpointed(evalShape(schema.byId(id), inv0dOpt(id)))
-          }
-          // the new round is materialized and reads nothing of the one it
-          // replaces, so the old round's blocks go now, not at result release
-          updated.foreach { case (id, marked) =>
-            unpin(state(id).marked)
-            state(id) = ShapeVerdict(targets(id), inv0d(id), marked)
-          }
-          val newSizes = scc.map(id => (state(id).strictValid.count(), state(id).invalid.count()))
-          converged = newSizes == sizes
-          sizes = newSizes
+          val next = markedCounts(scc)
+          converged = next == counts
+          counts = next
         }
+      }
+      // A shape with dependents is consumed from MULTIPLE downstream plan
+      // branches (each dependent's evalShape, plus the final report). If
+      // its lazily-persisted frames are still cold when those branches run
+      // concurrently inside one job, each branch recomputes the whole
+      // evaluation subtree (racing the cache) — nondeterministic 2-4×
+      // work. One cheap count materializes the cache exactly once, in
+      // dependency order; leaf shapes stay fully lazy.
+      if (!cyclic && referencedIds.contains(scc.head))
+        labeled(s"shacl eval+pin ${scc.head}")(state(scc.head).marked.count())
+      if (cyclic) {
+        stats.cyclicSccCount += 1
         stats.saturationMs += (System.nanoTime() - tSat) / 1000000L
       }
     }

@@ -54,5 +54,14 @@ class ReportSpec extends SparkTestBase {
       assert(log("violated") == lines(invalid).take(5))
     } finally result.unpersist()
   }
-}
 
+  test("validationReportTtl decides sh:conforms from the exact counts, not the capped list") {
+    val triples = TripleStore.fromTurtleFile(spark, resource("lubm/LUBM.ttl"))
+    val result = new Validator(spark, triples, ShapeParser.parseDir(resource("lubm/shapes"))).run()
+    try {
+      val ttl = Report.validationReportTtl(spark, result, maxResults = 0)
+      assert(ttl.contains("sh:conforms false"), ttl)
+      assert(!ttl.contains("sh:result"), ttl)
+    } finally result.unpersist()
+  }
+}
