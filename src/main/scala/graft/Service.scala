@@ -26,6 +26,13 @@ import java.nio.charset.StandardCharsets
   * SparkSession serves all requests (the reference resets its endpoint
   * singleton per request; a SparkSession is request-safe as-is).
   *
+  * A Turtle `dataPath` is validated and rendered in the caller's
+  * [[Tuning.serviceSession]], a reused child session with whole-stage
+  * codegen off, so warm requests stop recompiling generated code; a
+  * parquet `dataPath` runs in the caller's session. Listeners registered on
+  * the caller's session (`listenerManager`) therefore do not see a Turtle
+  * request's queries; SparkContext-level `SparkListener`s still do.
+  *
   * Both payloads render from ONE Spark action over the verdict frame
   * (`Report.summarize`: exact per-shape counts plus the first
   * `maxInstances` foci in Spark's focus order), and the frames the
@@ -48,12 +55,14 @@ object Service {
 
   private[graft] def runValidation(spark: SparkSession, schemaDir: String,
                                    dataPath: String): ValidationResult = {
-    val triples =
-      if (dataPath.endsWith(".ttl")) TripleStore.fromTurtleFile(spark, dataPath)
-      else TripleStore.readParquet(spark, dataPath)
+    val (session, triples) =
+      if (dataPath.endsWith(".ttl")) {
+        val s = Tuning.serviceSession(spark)
+        (s, TripleStore.fromTurtleFile(s, dataPath))
+      } else (spark, TripleStore.readParquet(spark, dataPath))
     val schema = ShapeParser.parseDir(schemaDir)
     // fixed service config, reference app/__init__.py:14-18
-    new Validator(spark, triples, schema,
+    new Validator(session, triples, schema,
       ValidatorConfig(selective = true, traversal = Traversal.DFS,
         heuristics = Traversal.DefaultHeuristics)).run()
   }

@@ -51,4 +51,47 @@ object Tuning {
         spark.conf.set(key, value)
     }
   }
+
+  private val WholeStage = "spark.sql.codegen.wholeStage"
+  private val serviceSessions = new java.util.WeakHashMap[SparkSession, SparkSession]()
+
+  /** The session a validation over a driver-parsed Turtle graph runs in:
+    * one child of `parent` (`newSession()`, shared SparkContext and cache),
+    * derived on first use and reused, with whole-stage codegen OFF. Every
+    * call first re-applies the parent's modifiable runtime confs (and
+    * unsets those the parent no longer carries), so a parent conf change
+    * is seen by the next request.
+    *
+    * Why: a Turtle graph is parsed on the driver into a `LocalRelation`,
+    * so it is bounded by driver memory, and at that size generated-code
+    * compilation, not data, sets a request's latency. The five-case
+    * service mix needs about 250 whole-stage classes per pass while
+    * Spark's codegen cache holds 100 (`spark.sql.codegen.cache.maxEntries`,
+    * static), so with codegen on every warm request recompiles its classes
+    * with janino and runs them before the JIT has them. Measured on a
+    * 4-vCPU host (`perfbench/run.py --workload shacl_service`), codegen
+    * on vs this session: a warm pass of the mix compiled 265 vs 74 classes;
+    * traced, seed 1, a request took 1,013 vs 807 ms with 44.5 vs 18 classes
+    * compiled and 956 vs 717 ms of task time; untraced, seeds 31-40, the
+    * request p50 was 1,217 vs 878 ms.
+    *
+    * Reused, not derived per request: Spark's codegen cache is keyed on
+    * (class loader, source), so a fresh session starts cold — a session per
+    * request compiled 39.5 classes a request and gained nothing (1,252 ms
+    * a request, seed 14, same host).
+    * Parquet inputs can be large; they stay in the caller's session. */
+  def serviceSession(parent: SparkSession): SparkSession = serviceSessions.synchronized {
+    var child = serviceSessions.get(parent)
+    if (child == null) {
+      child = parent.newSession()
+      serviceSessions.put(parent, child)
+    }
+    val inherited = parent.conf.getAll.filter { case (k, _) => parent.conf.isModifiable(k) }
+    child.conf.getAll.keys
+      .filter(k => child.conf.isModifiable(k) && k != WholeStage && !inherited.contains(k))
+      .foreach(child.conf.unset)
+    inherited.foreach { case (k, v) => child.conf.set(k, v) }
+    child.conf.set(WholeStage, "false")
+    child
+  }
 }

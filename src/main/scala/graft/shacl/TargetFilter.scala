@@ -32,17 +32,28 @@ object TargetFilter {
                        schema: ShapeSchema, threshold: Long = 256): Option[String] = {
     shape.shapeRefs.distinct.find { ref =>
       val refShape = schema.byId.get(ref)
-      // static conditions first — the counts below are Spark actions
-      // (full counts on purpose: they materialize the neighbor's persisted
-      // verdict frames, which every later consumer reuses)
+      // static conditions first — the counts below are a Spark action
       refShape.exists(_.targetQuery.isDefined) && !shape.isMaxRef(ref) &&
         evaluated.get(ref).exists { v =>
-          val nValid = v.validFinal.count()
-          val nInvalid = v.invalid.count()
+          val (nValid, nInvalid) = validInvalidCounts(v)
           ((nValid > 0 && nValid < threshold) || (nInvalid > 0 && nInvalid < threshold)) &&
             nInvalid > 0
         }
     }
+  }
+
+  /** (|validFinal|, |invalid|) of one verdict in ONE aggregate: validFinal
+    * is marked's non-F rows, invalid is inv0 plus marked's F rows, and inv0
+    * is disjoint from marked by construction, so both are counts of the
+    * `__isF` flag over `marked ∪ inv0 (flagged F)`. The aggregate scans the
+    * whole of both frames, so it also materializes the neighbor's persisted
+    * verdict frames, which every later consumer reuses. */
+  private def validInvalidCounts(v: ShapeVerdict): (Long, Long) = {
+    val r = v.marked.select(col("__isF"))
+      .union(v.inv0.select(lit(true).as("__isF")))
+      .agg(count(when(!col("__isF"), 1)), count(when(col("__isF"), 1)))
+      .head()
+    (r.getLong(0), r.getLong(1))
   }
 
   /** Classify the shape's targets using the verdicts of the referenced

@@ -1,14 +1,18 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import graft.rdf.TripleStore
 import org.apache.spark.TestBus
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import java.io.File
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 /** Drives the web-service lifecycle end-to-end: start the HTTP server on an
   * ephemeral port, POST the LUBM fixture, assert the JSON verdict payload
@@ -148,7 +152,9 @@ class ServiceSpec extends SparkTestBase {
       TestBus.drain(spark.sparkContext)
       actions.get - before
     }
-    spark.listenerManager.register(listener)
+    // Turtle requests run in the service session; its listeners see them
+    val session = Tuning.serviceSession(spark)
+    session.listenerManager.register(listener)
     try {
       for ((name, (schemaDir, dataPath)) <- Seq("lubm" -> lubm,
              "two_shapes/case1" -> golden("two_shapes/case1/definitions/case1.json"))) {
@@ -156,7 +162,7 @@ class ServiceSpec extends SparkTestBase {
         val request = counted(Service.validateToJson(spark, schemaDir, dataPath))
         assert(request - validator == 1, s"$name: $request actions, the validator alone $validator")
       }
-    } finally spark.listenerManager.unregister(listener)
+    } finally session.listenerManager.unregister(listener)
   }
 
   test("a request leaves no persistent RDD behind, also when it fails") {
@@ -177,5 +183,124 @@ class ServiceSpec extends SparkTestBase {
       Service.validateToJson(spark, resource("service/unsupported_sparql"), testData))
     assert(e.getMessage.contains("unsupported sh:select"), e.getMessage)
     assertReleased("the failed request")
+  }
+
+  /** Counts the queries that finish on `session` while `f` runs. */
+  private def actionsOn[T](session: org.apache.spark.sql.SparkSession)(f: => T): (T, Int) = {
+    val actions = new AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        actions.incrementAndGet()
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        actions.incrementAndGet()
+    }
+    TestBus.drain(spark.sparkContext)
+    session.listenerManager.register(listener)
+    try {
+      val out = f
+      TestBus.drain(spark.sparkContext)
+      (out, actions.get)
+    } finally session.listenerManager.unregister(listener)
+  }
+
+  private val goldenDefinitions: Seq[String] = {
+    val cases = Paths.get(resource("cases"))
+    val stream = Files.walk(cases)
+    try stream.iterator().asScala
+      .filter(p => p.getParent.getFileName.toString == "definitions" && p.toString.endsWith(".json"))
+      .map(p => cases.relativize(p).toString).toVector.sorted
+    finally stream.close()
+  }
+
+  // Turtle requests validate in the service session (whole-stage codegen
+  // off); GoldenCasesSpec covers the same cases with codegen on
+  for (definition <- goldenDefinitions)
+    test(s"validateToJson equals the ground truth: $definition") {
+      val root = new ObjectMapper().readTree(new File(resource(s"cases/$definition")))
+      def truth(f: String) = root.get("groundTruth").get(f).elements().asScala.map(_.asText()).toSet
+      val (schemaDir, dataPath) = golden(definition)
+      val shapes = new ObjectMapper().readTree(Service.validateToJson(spark, schemaDir, dataPath)).get("shapes")
+      def instances(f: String) = shapes.elements().asScala.flatMap(_.get(f).elements().asScala.map(_.asText())).toSet
+      assert(instances("valid_instances") == truth("valid"))
+      assert(instances("invalid_instances") == truth("invalid"))
+    }
+
+  test("the service session is derived once, without whole-stage codegen, and follows the caller's confs") {
+    val wholeStage = "spark.sql.codegen.wholeStage"
+    val callerWholeStage = spark.conf.getOption(wholeStage)
+    val session = Tuning.serviceSession(spark)
+    assert(session ne spark)
+    assert(Tuning.serviceSession(spark) eq session)
+    assert(session.conf.get(wholeStage) == "false")
+    val (schemaDir, dataPath) = golden("two_shapes/case1/definitions/case1.json")
+    Service.validateToJson(spark, schemaDir, dataPath)
+    assert(spark.conf.getOption(wholeStage) == callerWholeStage)
+
+    // a caller conf changed after first use is seen by the next request
+    val partitions = "spark.sql.shuffle.partitions"
+    val callerPartitions = spark.conf.get(partitions)
+    val seen = scala.collection.mutable.Set[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.synchronized(seen += qe.sparkSession.conf.get(partitions))
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.conf.set(partitions, "3")
+    session.listenerManager.register(listener)
+    try {
+      Service.validateToJson(spark, schemaDir, dataPath)
+      TestBus.drain(spark.sparkContext)
+    } finally {
+      session.listenerManager.unregister(listener)
+      spark.conf.set(partitions, callerPartitions)
+    }
+    assert(seen.synchronized(seen.toSet) == Set("3"))
+
+    // and one the caller unsets is unset in the service session too
+    val timeout = "spark.sql.broadcastTimeout"
+    spark.conf.set(timeout, "123")
+    try assert(Tuning.serviceSession(spark).conf.get(timeout) == "123")
+    finally spark.conf.unset(timeout)
+    assert(Tuning.serviceSession(spark).conf.get(timeout) == spark.conf.get(timeout))
+    assert(Tuning.serviceSession(spark).conf.get(partitions) == callerPartitions)
+    assert(session.conf.get(wholeStage) == "false")
+  }
+
+  test("a parquet request runs in the caller's session and answers like its Turtle graph") {
+    val (schemaDir, ttl) = golden("two_shapes/case1/definitions/case1.json")
+    val dir = Files.createTempDirectory("graft-service-parquet")
+    try {
+      val parquet = dir.resolve("triples").toString
+      TripleStore.fromTurtleFile(spark, ttl).write.parquet(parquet)
+      val ((json, onService), onCaller) =
+        actionsOn(spark)(actionsOn(Tuning.serviceSession(spark))(Service.validateToJson(spark, schemaDir, parquet)))
+      assert(onCaller > 0 && onService == 0, s"caller $onCaller actions, service session $onService")
+      assert(json == Service.validateToJson(spark, schemaDir, ttl))
+    } finally {
+      Files.walk(dir).sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+    }
+  }
+
+  test("a warm pass of the benchmark's service mix compiles fewer than 120 generated classes") {
+    // the five golden cases of perfbench's shacl_service mix; at the parent
+    // of the service session (whole-stage codegen on) a warm pass compiled
+    // about 250 classes, more than Spark's 100-entry codegen cache holds
+    val mix = Seq(
+      "single_shape/case4/definitions/case4.json",
+      "single_shape/case7/definitions/case7.json",
+      "or_constraint/case4/definitions/case4.json",
+      "two_shapes/case1/definitions/case1.json",
+      "recursion/case2/definitions/case2a.json").map(golden)
+    def compiled(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      for ((schemaDir, dataPath) <- mix) {
+        Service.validateToJson(spark, schemaDir, dataPath)
+        spark.catalog.clearCache()
+      }
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    compiled()
+    val warm = compiled()
+    assert(warm < 120, s"a warm pass compiled $warm classes")
   }
 }
