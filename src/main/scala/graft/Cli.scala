@@ -14,9 +14,12 @@ import org.apache.spark.sql.SparkSession
   * Validation.py:587-605); `--outputs` additionally writes targets_valid.log
   * and targets_violated.log (save_targets_to_file, main.py:44-45 — target
   * classifications are saved only on request), `--orderby` globally sorts
-  * the verdict parquet, `-m` bounds the A10 eligibility lists, `--force`
-  * skips unparseable shape files with a warning (main.py:50-51). Prints a
-  * per-shape summary.
+  * the verdict parquet, `--force` skips unparseable shape files with a
+  * warning (main.py:50-51). `-m` is accepted so reference command lines
+  * run, and ignored: in the reference it is the VALUES chunk size of the
+  * queries sent to the endpoint (main.py:38-39), and there is nothing to
+  * chunk here. The report, stats and log texts render from ONE
+  * `Report.summarize`. Prints the stats text.
   */
 object Cli {
   def main(args: Array[String]): Unit = {
@@ -27,7 +30,6 @@ object Cli {
     var heuristics = Traversal.DefaultHeuristics
     var selective = true
     var format = "SHACL"
-    var maxSplitSize = 256L
     var orderBy = false
     var outputs = false
     var force = false
@@ -37,7 +39,7 @@ object Cli {
     while (i < args.length) {
       args(i) match {
         case "-d" => i += 1; shapesDir = args(i)
-        case "-m" => i += 1; maxSplitSize = args(i).toLong
+        case "-m" => i += 1 // reference VALUES chunk size: nothing to chunk
         case "--no-selective" => selective = false
         case "--orderby" => orderBy = true
         case "--outputs" => outputs = true
@@ -61,7 +63,7 @@ object Cli {
         System.err.println(
           "usage: graft.Cli -d <shapesDir> <data.ttl|parquet> <outDir> [DFS|BFS] " +
           "[--heuristics TARGET IN BIG] [--no-selective] [--json] " +
-          "[-m maxSize] [--orderby] [--outputs] [--force]")
+          "[-m maxSize (accepted, ignored)] [--orderby] [--outputs] [--force]")
         sys.exit(2)
     }
 
@@ -81,19 +83,20 @@ object Cli {
         else TripleStore.readParquet(spark, dataPath)
 
       val schema = ShapeParser.parseDir(shapesDir, format, lenient = force)
-      val cfg = ValidatorConfig(selective = selective, traversal = algo,
-        heuristics = heuristics, maxSplitSize = maxSplitSize)
+      val cfg = ValidatorConfig(selective = selective, traversal = algo, heuristics = heuristics)
       val result = new Validator(spark, triples, schema, cfg).run()
 
       Report.writeVerdicts(spark, result, outDir, ordered = orderBy)
       Report.writeTraces(spark, result, outDir)
       if (outputs) Report.writeTargetLogs(spark, result, outDir)
+      // the report's cap; the counts all three texts read are exact at any cap
+      val summary = Report.summarize(spark, result, maxInstances = 10000)
       java.nio.file.Files.write(java.nio.file.Paths.get(s"$outDir/validationReport.ttl"),
-        Report.validationReportTtl(spark, result).getBytes("UTF-8"))
-      val stats = Report.statsText(spark, result)
+        Report.validationReportTtl(summary).getBytes("UTF-8"))
+      val stats = Report.statsText(result, summary)
       java.nio.file.Files.write(java.nio.file.Paths.get(s"$outDir/stats.txt"), stats.getBytes("UTF-8"))
       java.nio.file.Files.write(java.nio.file.Paths.get(s"$outDir/validation.log"),
-        Report.validationLog(spark, result).getBytes("UTF-8"))
+        Report.validationLog(result, summary).getBytes("UTF-8"))
       println(stats)
     } finally spark.stop()
   }

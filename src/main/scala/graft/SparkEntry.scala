@@ -21,19 +21,28 @@ import org.apache.spark.sql.functions._
   */
 object SparkEntry {
 
-  /** Parquet footer SCHEMAS cached per path (metadata only, never data):
-    * each bench/Verify rep re-invokes the query function, and a bare
+  /** Parquet footer SCHEMAS cached per [[footerKey]] (metadata only, never
+    * data): each bench/Verify rep re-invokes the query function, and a bare
     * `spark.read.parquet` pays a schema-inference job per call — 3 jobs per
-    * q_shacl_validate rep for an immutable test-data directory. Supplying
-    * the schema skips inference; results are byte-identical (the schema of
-    * a read-only parquet file cannot change mid-process). */
+    * q_shacl_validate rep for an unchanged test-data directory. Supplying
+    * the schema skips inference; results are byte-identical. */
   private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), org.apache.spark.sql.types.StructType]()
 
-  /** Parquet footer layout per path: (total row groups, total rows).
-    * Metadata only, never data — same rationale as [[schemaCache]]. */
+  /** Parquet footer layout per [[footerKey]]: (total row groups, total
+    * rows). Metadata only, never data — same rationale as [[schemaCache]]. */
   private val layoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), (Long, Long)]()
+
+  /** A footer cache key: the path plus its `FileStatus` modification time
+    * and length. Rewriting the path (a file, or a directory's entries)
+    * changes the key, so a cached schema or layout cannot outlive the data
+    * it describes. */
+  private def footerKey(spark: SparkSession, path: String): (String, Long, Long) = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p)
+    (path, st.getModificationTime, st.getLen)
+  }
 
   private def footerLayout(spark: SparkSession, path: String): (Long, Long) = {
     val conf = spark.sessionState.newHadoopConf()
@@ -56,10 +65,10 @@ object SparkEntry {
     (rowGroups, rows)
   }
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+  private[graft] def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     Tuning.sessionDefaults(spark)
     val path = s"$dir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(path, p => spark.read.parquet(p).schema)
+    val schema = schemaCache.computeIfAbsent(footerKey(spark, path), k => spark.read.parquet(k._1).schema)
     spark.read.schema(schema).parquet(path)
   }
 
@@ -90,7 +99,7 @@ object SparkEntry {
   private def tSpread(spark: SparkSession, dir: String, name: String): DataFrame = {
     val base = t(spark, dir, name)
     val path = s"$dir/$name.parquet"
-    val (rowGroups, rows) = layoutCache.computeIfAbsent(path, p => footerLayout(spark, p))
+    val (rowGroups, rows) = layoutCache.computeIfAbsent(footerKey(spark, path), k => footerLayout(spark, k._1))
     val cores = spark.sparkContext.defaultParallelism
     if (rowGroups < cores && rows >= 1000L)
       base.repartition(cores, col(base.schema.fieldNames.head))

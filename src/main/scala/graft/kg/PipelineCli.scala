@@ -67,7 +67,7 @@ object PipelineCli {
         s"triples_per_sec=${f"${tripleCount / sec}%.0f"} precision=${f"$p%.4f"} recall=${f"$r%.4f"}")
       println("stage counters: " + result.counters.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(" "))
       result.validation.foreach { v =>
-        println(graft.shacl.Report.statsText(spark, v))
+        println(graft.shacl.Report.statsText(v, graft.shacl.Report.summarize(spark, v, maxInstances = 10000)))
       }
     } finally spark.stop()
   }

@@ -77,12 +77,6 @@ final case class Shape(
     val skipped = maxValidRefs.keySet
     maxConstraints.filterNot(c => c.shapeRef.exists(skipped.contains))
   }
-
-  /** True if `other` occurs in a max-cardinality constraint of this shape —
-    * disables neighbor-based target filtering (Shape.is_max_ref,
-    * core/Shape.py:105-108, used at Validation.py:103-104). */
-  def isMaxRef(other: String): Boolean =
-    constraints.exists(c => c.shapeRef.contains(other) && c.max != -1)
 }
 
 final case class ShapeSchema(shapes: Seq[Shape]) {

@@ -130,17 +130,15 @@ object Report {
     } finally writers.values.foreach(_.close())
   }
 
-  /** SHACL validation report TTL (Validation.py:609-627), from ONE
-    * [[summarize]] action: shapes in id order, each shape's first
-    * `maxResults` violating foci in Spark's focus order. The cap keeps the
+  /** SHACL validation report TTL (Validation.py:609-627) from a
+    * [[summarize]] result: shapes in id order, each shape's summarized
+    * violating foci in Spark's focus order. The summary's cap keeps the
     * report human-sized; at scale use the parquet verdict table instead.
     * `sh:conforms` comes from the exact violated counts, not the capped
     * list. */
-  def validationReportTtl(spark: SparkSession, result: ValidationResult,
-                          maxResults: Int = 10000): String = {
-    val summary = summarize(spark, result, maxResults).toSeq.sortBy(_._1)
-    val conforms = summary.forall(_._2.violated == 0)
-    val violations = summary.flatMap { case (shapeId, s) => s.violatedFoci.map(shapeId -> _) }
+  def validationReportTtl(summary: Map[String, ShapeSummary]): String = {
+    val conforms = summary.values.forall(_.violated == 0)
+    val violations = summary.toSeq.sortBy(_._1).flatMap { case (shapeId, s) => s.violatedFoci.map(shapeId -> _) }
     val sb = new StringBuilder("@prefix sh: <http://www.w3.org/ns/shacl#> . \n\n")
     sb.append(s":report a sh:ValidationReport ;\n  sh:conforms $conforms ")
     if (violations.nonEmpty) {
@@ -158,9 +156,9 @@ object Report {
 
   /** `validation.log` parity (Validation.validation_output writes the
     * stats log + global valid/invalid totals): per-shape progress lines,
-    * node order, and the final target totals. */
-  def validationLog(spark: SparkSession, result: ValidationResult): String = {
-    val summary = summarize(spark, result, maxInstances = 0)
+    * node order, and the final target totals, from a [[summarize]] result
+    * (only its exact counts are read). */
+  def validationLog(result: ValidationResult, summary: Map[String, ShapeSummary]): String = {
     val perShape = summary.toSeq.sortBy(_._1).map { case (id, s) =>
       s"Evaluated shape $id: valid=${s.valid} violated=${s.violated}"
     }
@@ -178,18 +176,23 @@ object Report {
     * with Spark-side meanings:
     *  - solution mappings  → rows evaluated by the fixpoint (marked-frame
     *    rows; max = largest single shape) — the engine's working-set
-    *    analogue of the reference's per-query binding counts
+    *    analogue of the reference's per-query binding counts; one
+    *    aggregate over every shape's marked frame
     *  - rules in memory    → the set-algebra engine grounds no explicit
     *    rules; reported as fixpoint iterations × cyclic shape count (the
     *    state actually re-derived per round)
     *  - query time         → plan/compile phase (no queries are shipped)
     *  - interleaving time  → evaluation wall-clock
     *  - saturation time    → share of evaluation inside cyclic fixpoints */
-  def statsText(spark: SparkSession, result: ValidationResult): String = {
+  def statsText(result: ValidationResult, summary: Map[String, ShapeSummary]): String = {
     val st = result.stats
-    val summary = summarize(spark, result, maxInstances = 0)
-    val perShape = result.verdicts.toSeq.sortBy(_._1).map { case (id, v) =>
-      (id, summary(id).valid, summary(id).violated, v.marked.count())
+    val marked = result.verdicts.toSeq
+      .map { case (id, v) => v.marked.select(lit(id).as("shape")) }
+      .reduceOption(_ union _)
+      .map(_.groupBy("shape").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
+      .getOrElse(Map.empty[String, Long])
+    val perShape = result.verdicts.keys.toSeq.sorted.map { id =>
+      (id, summary(id).valid, summary(id).violated, marked.getOrElse(id, 0L))
     }
     val valid = perShape.map(_._2).sum
     val invalid = perShape.map(_._3).sum
@@ -212,7 +215,6 @@ object Report {
       s"total time: ${(st.planMs + st.evalMs) / 1000.0}" :+
       s"sccs: ${st.sccCount} (cyclic: ${st.cyclicSccCount})" :+
       s"fixpoint iterations: ${st.fixpointIterations}" :+
-      s"pruned shapes (A10): ${st.prunedShapes}" :+
       s"node order: ${result.nodeOrder.mkString(" -> ")}").mkString("\n")
   }
 }

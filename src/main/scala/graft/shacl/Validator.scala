@@ -1,6 +1,7 @@
 package graft.shacl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.rdf.Rdf
@@ -10,9 +11,11 @@ import scala.util.control.NonFatal
 /** Configuration knobs with reference parity (main.py:20-53). The traversal/
   * heuristic knobs and `selective` never change VERDICTS (the reference test
   * grid asserts exactly this invariance) but they do reach execution:
-  * `selective` toggles target-pushdown semi-joins (A7) and A10 target
-  * pre-filtering, the traversal/heuristics pick the evaluation order of
-  * independent dependency chains.
+  * `selective` toggles target-pushdown semi-joins (A7), the traversal/
+  * heuristics pick the evaluation order of independent dependency chains.
+  * The reference's filtered target extraction (Validation.py:101-110) is
+  * not ported: the targets it prunes are the ones the fixpoint proves F in
+  * round 1, and its `-m` VALUES chunk size has nothing to chunk here.
   */
 final case class ValidatorConfig(
     selective: Boolean = true,
@@ -30,23 +33,12 @@ final case class ValidatorConfig(
       * into multi-hop patterns, so they match nothing; parity keeps that.
       * ON compiles each hop to an equi-join on the intermediate node —
       * capability the SHACL spec defines but the reference lacks. */
-    expandSequencePaths: Boolean = false,
-    /** Reference `-m maxSize` (main.py:38-39): max number of instances a
-      * neighbor's verdict list may hold to qualify for A10 target
-      * pre-filtering. INTENTIONAL DIVERGENCE from the reference: there, `-m`
-      * only sets the per-query VALUES chunk size (Shape.py, query splitting)
-      * while the A10 eligibility threshold is hardcoded at 256
-      * (Validation.py:162-164). Chunking is obsolete on Spark (joins have no
-      * endpoint-URL length limit), so the knob is repurposed as the live
-      * eligibility threshold — `-m 1000` changes pruning here where the
-      * reference would not. Plan-only either way: verdict invariance across
-      * `-m` values is asserted by PlanSpec and the golden grid. */
-    maxSplitSize: Long = 256
+    expandSequencePaths: Boolean = false
 )
 
 /** Per-shape verdict state, all derived from TWO cached frames: the
   * 2-valued immediately-invalid set `inv0` (local cardinality, sh:or,
-  * sh:sparql, A10-pruned targets — distinct) and `marked(focus,__isF,__isT)`
+  * sh:sparql — distinct) and `marked(focus,__isF,__isT)`
   * covering `targets ∖ inv0` with the fixpoint's proven-invalid (F) /
   * proven-valid (T) flags. Derivations are lazy filters — no further joins:
   *  - `strictValid` = marked T rows: the subset PROVEN valid by saturation;
@@ -80,13 +72,38 @@ final case class ValidationResult(
 }
 
 object ValidationResult {
-  /** Free one pinned frame. A persisted frame leaves the cache manager; an
-    * eager `localCheckpoint` is a LogicalRDD over the checkpointed RDD,
-    * whose blocks `Dataset.unpersist` does not free, so the RDD itself is
-    * unpersisted. */
+  /** Runs that hold each shared cache entry. Validations running side by
+    * side in one SparkContext share cache entries: `persist` of a plan
+    * with the same result as a cached one (two requests over the same
+    * Turtle file build such plans) reuses that entry. When the first run
+    * to finish uncached it, the other run went on reading it from outside
+    * the cache manager and rebuilt its blocks where no release could reach
+    * them: 4 threads sending the service mix at once left 1-2 persistent
+    * RDDs behind in 2 of 3 runs. So the last holder uncaches the entry. */
+  private val holders = new java.util.IdentityHashMap[AnyRef, Integer]()
+
+  private def cacheEntry(df: DataFrame): Option[AnyRef] =
+    df.sparkSession.sharedState.cacheManager.lookupCachedData(castToImpl(df)).map(_.cachedRepresentation.cacheBuilder)
+
+  /** Persist `df`, counting this run among the holders of its entry. */
+  private[shacl] def persist(df: DataFrame): DataFrame = holders.synchronized {
+    df.persist()
+    cacheEntry(df).foreach(e => holders.put(e, holders.getOrDefault(e, 0) + 1))
+    df
+  }
+
+  /** Free one pinned frame. A persisted frame leaves the cache manager
+    * once its last holder releases it; an eager `localCheckpoint` is a
+    * LogicalRDD over the checkpointed RDD, whose blocks `Dataset.unpersist`
+    * does not free, so the RDD itself is unpersisted. */
   private[shacl] def release(df: DataFrame): Unit = df.queryExecution.logical match {
     case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-    case _ => df.unpersist()
+    case _ => holders.synchronized {
+      cacheEntry(df) match {
+        case Some(e) if holders.getOrDefault(e, 0) > 1 => holders.put(e, holders.get(e) - 1)
+        case entry => entry.foreach(holders.remove); df.unpersist()
+      }
+    }
   }
 }
 
@@ -98,8 +115,6 @@ final class ValidationStats {
   var cyclicSccCount: Int = 0
   /** compiled constraint/target evaluations (≈ reference's #queries) */
   var totalQueries: Int = 0
-  /** shapes whose target sets were pre-filtered via A10 */
-  var prunedShapes: Int = 0
   /** wall-clock: plan/compile phase vs evaluation; saturationMs is the
     * share of evalMs spent inside cyclic-SCC fixpoint iteration */
   var planMs: Long = 0
@@ -145,16 +160,33 @@ final class Validator(
   /** Every frame this run pins, handed to the result for release (or
     * released here when the run fails). */
   private val pinned = scala.collection.mutable.ArrayBuffer[DataFrame]()
-  private def persisted(df: DataFrame): DataFrame = { pinned += df.persist(); df }
+  private def persisted(df: DataFrame): DataFrame = { pinned += ValidationResult.persist(df); df }
   private def checkpointed(df: DataFrame): DataFrame = { val c = df.localCheckpoint(true); pinned += c; c }
   /** Release a frame this run pinned; one it never pinned is left alone. */
   private def unpin(df: DataFrame): Unit =
     if (pinned.contains(df)) { pinned -= df; ValidationResult.release(df) }
 
-  /** Edges for a path: (focus, o) — see [[PathAlgebra.edges]] (shared with
-    * A10 target pre-filtering so both sides agree on path semantics). */
-  private def pathEdges(path: PathExpr): DataFrame =
-    PathAlgebra.edges(triples, path, config.expandSequencePaths)
+  /** Edges for a path: `(focus, o)`. Inverse paths swap subject/object
+    * (reference ShapeParser.py:507-511); sequence paths are opaque and match
+    * nothing (parity with the reference generator, which parses
+    * `sh:path (p1 p2 …)` at ShapeParser.py:275-283 but never expands it)
+    * unless `expandSequencePaths` compiles them to multi-hop equi-joins —
+    * each hop filters one predicate, so over the pred-partitioned triple
+    * layout every hop is a pruned scan, and the hop joins shuffle on the
+    * intermediate node id (no driver-side state, no cartesians). */
+  private def pathEdges(path: PathExpr): DataFrame = path match {
+    case DirectPath(p) =>
+      triples.filter($"pred" === p).select($"subj".as("focus"), $"obj".as("o"))
+    case InversePath(p) =>
+      triples.filter($"pred" === p).select($"obj".as("focus"), $"subj".as("o"))
+    case SequencePath(iris) if config.expandSequencePaths && iris.nonEmpty =>
+      val first = triples.filter($"pred" === iris.head).select($"subj".as("focus"), $"obj".as("o"))
+      iris.tail.foldLeft(first) { (acc, p) =>
+        val hop = triples.filter($"pred" === p).select($"subj".as("o"), $"obj".as("o2"))
+        acc.join(hop, Seq("o")).select($"focus", $"o2".as("o"))
+      }
+    case SequencePath(_) => spark.emptyDataset[(String, String)].toDF("focus", "o")
+  }
 
   /** A1/A3 target class. A custom target query (`sh:targetQuery` / JSON
     * `targetDef.query`) takes precedence over `sh:targetClass` — the
@@ -358,18 +390,22 @@ final class Validator(
       s.id -> frame
     }.toMap
 
-    // 2-valued immediately-invalid PARTS, kept separate so structurally
-    // absent sources cost nothing: each part is individually distinct by
-    // construction (localCardInvalid/orInvalid derive from the distinct
-    // target frame via 1:≤1 joins / anti-joins, sparqlInvalid is a
-    // semi-join of targets, A10-classify aggregates per focus), so the
-    // final per-shape inv0 needs a distinct ONLY when ≥2 parts could
-    // overlap — and a shape with NO parts skips the union/distinct/persist
-    // /anti-join machinery entirely (r06: was a distinct + persist + anti-
-    // join of a provably-empty frame on every constraint-only shape).
-    val invalid0parts: Map[String, Seq[DataFrame]] = schema.shapes.map { s =>
+    // 2-valued immediately-invalid set per shape, pinned. Its parts are
+    // each distinct by construction (localCardInvalid/orInvalid derive from
+    // the distinct target frame via 1:≤1 joins / anti-joins, sparqlInvalid
+    // is a semi-join of targets), so inv0 needs a distinct ONLY when ≥2
+    // parts could overlap — and a shape with NO parts has no inv0 frame and
+    // skips the union/distinct/persist/anti-join machinery entirely (r06:
+    // was a distinct + persist + anti-join of a provably-empty frame on
+    // every constraint-only shape).
+    val inv0: Map[String, Option[DataFrame]] = schema.shapes.map { s =>
       val t = targets(s.id)
-      s.id -> Seq(localCardInvalid(s, t), orInvalid(s, t), sparqlInvalid(s, t)).flatten
+      val parts = Seq(localCardInvalid(s, t), orInvalid(s, t), sparqlInvalid(s, t)).flatten
+      s.id -> (parts match {
+        case Seq() => None
+        case Seq(one) => Some(one)
+        case many => Some(many.reduce(_ union _).distinct())
+      }).map(pin(s.id, _))
     }.toMap
 
     // Reference checks per shape: ref'd min, ref'd max, then skipped max
@@ -477,39 +513,6 @@ final class Validator(
     val referencedIds: Set[String] = schema.shapes
       .flatMap(x => schema.dependencies.getOrElse(x.id, Nil)).toSet
 
-    /** A10 filtered target extraction: when a referenced neighbor is already
-      * fully evaluated and passes the reference's eligibility rule
-      * (Validation.py:147-175), classify this shape's targets against the
-      * neighbor's valid list and fold the immediately-invalid ones into
-      * inv0 — early violation pruning with identical verdicts (the
-      * planner-knob grid asserts the invariance). Applied per shape in
-      * traversal order REGARDLESS of recursion, like the reference
-      * (Validation.py:101-110): inside a cyclic SCC only out-of-SCC
-      * neighbors qualify (in-SCC shapes are not yet in `state`), and a
-      * target pruned into inv0 is indistinguishable to the fixpoint from
-      * one proven F in round 1 — F is monotone, so verdicts are unchanged
-      * while the fixpoint's working set shrinks up front. */
-    def a10Prune(s: Shape): Seq[DataFrame] = {
-      if (!config.selective) return Nil
-      for {
-        ref <- TargetFilter.eligibleNeighbor(s, state.toMap, schema, config.maxSplitSize).toSeq
-        c <- s.minConstraints.find(_.shapeRef.contains(ref)).toSeq
-      } yield {
-        val cls = TargetFilter.classify(spark, triples, targets(s.id), c,
-          state(ref).validFinal, config.expandSequencePaths)
-        stats.prunedShapes += 1
-        cls.invalid
-      }
-    }
-
-    /** Final per-shape inv0 from its parts: none → statically empty (no
-      * frame at all), one → already distinct, several → union + distinct. */
-    def combineInv0(parts: Seq[DataFrame]): Option[DataFrame] = parts match {
-      case Seq() => None
-      case Seq(one) => Some(one)
-      case many => Some(many.reduce(_ union _).distinct())
-    }
-
     /** Guide §1.5: label jobs by validation phase + shape so multi-job
       * evaluations are attributable in the UI/JobProbe. Thread-local and
       * restored by the caller pattern (description cleared at run end). */
@@ -526,14 +529,8 @@ final class Validator(
     for (scc <- sccs) {
       val cyclic = schema.isCyclic(scc)
       val tSat = System.nanoTime()
-      // inv0 before the SCC's state is seeded: A10 sees only fully
-      // evaluated out-of-SCC neighbors, exactly where the reference applies
-      // target filtering for recursive shapes too (Validation.py:101-110)
-      val inv0dOpt: Map[String, Option[DataFrame]] = scc.map { id =>
-        id -> combineInv0(invalid0parts(id) ++ a10Prune(schema.byId(id))).map(pin(id, _))
-      }.toMap
       def verdict(id: String, marked: DataFrame): ShapeVerdict =
-        ShapeVerdict(targets(id), inv0dOpt(id).getOrElse(emptyFocus()), marked)
+        ShapeVerdict(targets(id), inv0(id).getOrElse(emptyFocus()), marked)
       scc.foreach(id => state(id) = verdict(id, emptyMarked))
       val maxRounds = if (cyclic) config.maxIterations else 1
       var counts = scc.map(_ => (0L, 0L))
@@ -542,7 +539,7 @@ final class Validator(
       while (!converged && round < maxRounds) {
         round += 1
         // every shape of a round reads the previous round's state
-        val updated = scc.map(id => id -> pin(id, evalShape(schema.byId(id), inv0dOpt(id))))
+        val updated = scc.map(id => id -> pin(id, evalShape(schema.byId(id), inv0(id))))
         // a cyclic round is materialized and reads nothing of the one it
         // replaces, so the old round's blocks go now, not at result release
         updated.foreach { case (id, marked) =>

@@ -72,11 +72,11 @@ class PlanSpec extends SparkTestBase {
     assert(on > off, s"selective=on must add target-pushdown semi-joins (on=$on off=$off)")
   }
 
-  test("A10 filtered target extraction prunes under selective, not without") {
+  test("selective on and off agree: min reference to an evaluated neighbor") {
     import graft.shacl._
     val ns = "http://q.example.org/"
-    // OrderShape evaluated first (dependency), small invalid list (<256) →
-    // CustShape's targets are A10-pre-classified when selective is on
+    // OrderShape is evaluated first (dependency) and has one invalid order,
+    // so CustShape's customer of that order fails its min reference
     val rows = Seq(
       ("o1", graft.rdf.Rdf.rdfType, ns + "O"), ("o2", graft.rdf.Rdf.rdfType, ns + "O"),
       ("o1", ns + "line", "l1"), // o2 has no line → invalid
@@ -93,31 +93,19 @@ class PlanSpec extends SparkTestBase {
       new Validator(spark, triples, schema, ValidatorConfig(selective = selective)).run()
     val on = run(true)
     val off = run(false)
-    assert(on.stats.prunedShapes == 1, "A10 pruning must fire under selective")
-    assert(off.stats.prunedShapes == 0, "A10 pruning must not fire when selective is off")
-    // identical verdicts either way
     def sets(r: ValidationResult) = (
       r.valid(ns + "CustShape").collect().map(_.getString(0)).toSet,
       r.invalid(ns + "CustShape").collect().map(_.getString(0)).toSet)
     assert(sets(on) == sets(off) && sets(on) == (Set("c1"), Set("c2")))
     on.unpersist(); off.unpersist()
-    // -m / maxSplitSize is LIVE: 0 makes every neighbor list too big for the
-    // eligibility rule, so pruning cannot fire even under selective — and
-    // verdicts stay identical (the knob trades plans, never answers)
-    val tiny = new Validator(spark, triples, schema,
-      ValidatorConfig(selective = true, maxSplitSize = 0)).run()
-    assert(tiny.stats.prunedShapes == 0, "maxSplitSize=0 must disable A10 pruning")
-    assert(sets(tiny) == (Set("c1"), Set("c2")))
-    tiny.unpersist()
   }
 
-  test("A10 pruning fires inside cyclic SCCs against evaluated out-of-SCC neighbors") {
+  test("selective on and off agree: cyclic SCC with an out-of-SCC neighbor") {
     import graft.shacl._
     val ns = "http://r.example.org/"
-    // N is acyclic and evaluated first (non-empty invalid < 256); A and B
-    // form a cyclic SCC, and A also min-references N — the reference applies
-    // target filtering per shape in traversal order regardless of recursion
-    // (Validation.py:101-110), so A's targets must be pre-classified.
+    // N is acyclic and evaluated first (one invalid instance); A and B form
+    // a cyclic SCC, and A also min-references N, so a2 (linked only to the
+    // invalid n2) fails in the fixpoint's first round.
     val triples = Seq(
       ("n1", graft.rdf.Rdf.rdfType, ns + "N"), ("n2", graft.rdf.Rdf.rdfType, ns + "N"),
       ("n1", ns + "line", "l1"), // n2 has no line → invalid
@@ -141,8 +129,6 @@ class PlanSpec extends SparkTestBase {
     val on = run(true)
     val off = run(false)
     assert(on.stats.cyclicSccCount == 1, "A/B must form a cyclic SCC")
-    assert(on.stats.prunedShapes >= 1, "A10 must fire for the in-cycle shape A")
-    assert(off.stats.prunedShapes == 0)
     def sets(r: ValidationResult, id: String) = (
       r.valid(ns + id).collect().map(_.getString(0)).toSet,
       r.invalid(ns + id).collect().map(_.getString(0)).toSet)
@@ -152,13 +138,12 @@ class PlanSpec extends SparkTestBase {
     on.unpersist(); off.unpersist()
   }
 
-  test("A10 pruning honors expandSequencePaths (shared path semantics)") {
+  test("selective on and off agree: sequence-path reference under expandSequencePaths") {
     import graft.shacl._
     val ns = "http://s.example.org/"
     // S min-references N through a SEQUENCE path has/sub; with the knob on,
-    // TargetFilter.classify must count through the same 2-hop expansion the
-    // validator uses — s2 (reaching only the invalid n2) is pruned, s1 is
-    // not, and verdicts match the non-selective evaluation exactly.
+    // the reference counts through the 2-hop expansion — s2 (reaching only
+    // the invalid n2) fails, s1 does not, with selective on and off.
     val triples = Seq(
       ("n1", graft.rdf.Rdf.rdfType, ns + "N"), ("n2", graft.rdf.Rdf.rdfType, ns + "N"),
       ("n1", ns + "line", "l1"),
@@ -176,12 +161,29 @@ class PlanSpec extends SparkTestBase {
       ValidatorConfig(selective = selective, expandSequencePaths = true)).run()
     val on = run(true)
     val off = run(false)
-    assert(on.stats.prunedShapes == 1, "sequence-path constraint must prune under the knob")
     def sets(r: ValidationResult) = (
       r.valid(ns + "S").collect().map(_.getString(0)).toSet,
       r.invalid(ns + "S").collect().map(_.getString(0)).toSet)
     assert(sets(on) == sets(off) && sets(on) == (Set("s1"), Set("s2")))
     on.unpersist(); off.unpersist()
+  }
+
+  test("the LUBM verdict frame executes without an Expand") {
+    import graft.shacl._
+    // evalShape's explicit two-level aggregation replaced three
+    // countDistinct calls, which planned through `Expand [3 projections]`
+    // and tripled every edge row before the shuffle
+    val triples = TripleStore.fromTurtleFile(spark, "src/test/resources/lubm/LUBM.ttl")
+    val result = new Validator(spark, triples, ShapeParser.parseDir("src/test/resources/lubm/shapes")).run()
+    try {
+      val frame = Report.verdictFrame(spark, result)
+      frame.collect()
+      // the tree string takes in the final adaptive plan and the plans of
+      // the cached verdict frames it scans
+      val plan = frame.queryExecution.executedPlan.toString
+      assert(plan.contains("InMemoryTableScan"), plan)
+      assert("\\bExpand\\b".r.findFirstIn(plan).isEmpty, s"expected no Expand, got:\n$plan")
+    } finally result.unpersist()
   }
 
   test("bucketed triple table: groupBy(subj) aggregates without a shuffle") {

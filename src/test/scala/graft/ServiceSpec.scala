@@ -281,16 +281,19 @@ class ServiceSpec extends SparkTestBase {
     }
   }
 
+  /** The five golden cases of perfbench's shacl_service mix. */
+  private val benchMix = Seq(
+    "single_shape/case4/definitions/case4.json",
+    "single_shape/case7/definitions/case7.json",
+    "or_constraint/case4/definitions/case4.json",
+    "two_shapes/case1/definitions/case1.json",
+    "recursion/case2/definitions/case2a.json")
+
   test("a warm pass of the benchmark's service mix compiles fewer than 120 generated classes") {
-    // the five golden cases of perfbench's shacl_service mix; at the parent
-    // of the service session (whole-stage codegen on) a warm pass compiled
-    // about 250 classes, more than Spark's 100-entry codegen cache holds
-    val mix = Seq(
-      "single_shape/case4/definitions/case4.json",
-      "single_shape/case7/definitions/case7.json",
-      "or_constraint/case4/definitions/case4.json",
-      "two_shapes/case1/definitions/case1.json",
-      "recursion/case2/definitions/case2a.json").map(golden)
+    // at the parent of the service session (whole-stage codegen on) a warm
+    // pass compiled about 250 classes, more than Spark's 100-entry codegen
+    // cache holds
+    val mix = benchMix.map(golden)
     def compiled(): Long = {
       val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       for ((schemaDir, dataPath) <- mix) {
@@ -302,5 +305,45 @@ class ServiceSpec extends SparkTestBase {
     compiled()
     val warm = compiled()
     assert(warm < 120, s"a warm pass compiled $warm classes")
+  }
+
+  test("concurrent Turtle requests: every answer right, nothing left pinned") {
+    // Service serves 4 handler threads, and every Turtle request runs in
+    // the one Tuning.serviceSession of the caller
+    val baseline = spark.sparkContext.getPersistentRDDs.keySet
+    def truth(definition: String): (Set[String], Set[String]) = {
+      val gt = new ObjectMapper().readTree(new File(resource(s"cases/$definition"))).get("groundTruth")
+      def set(f: String) = gt.get(f).elements().asScala.map(_.asText()).toSet
+      (set("valid"), set("invalid"))
+    }
+    def answer(json: String): (Set[String], Set[String]) = {
+      val shapes = new ObjectMapper().readTree(json).get("shapes")
+      def set(f: String) = shapes.elements().asScala.flatMap(_.get(f).elements().asScala.map(_.asText())).toSet
+      (set("valid_instances"), set("invalid_instances"))
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val wrong = try {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val futures = (0 until 4).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Seq[String]] {
+          def call(): Seq[String] = {
+            start.await()
+            // each thread walks the mix from its own offset, so different
+            // cases run side by side
+            benchMix.indices.map(i => benchMix((i + t) % benchMix.size)).flatMap { definition =>
+              val (schemaDir, dataPath) = golden(definition)
+              val got = answer(Service.validateToJson(spark, schemaDir, dataPath))
+              if (got == truth(definition)) None else Some(s"thread $t, $definition: $got")
+            }
+          }
+        })
+      }
+      start.countDown()
+      futures.flatMap(_.get(10, java.util.concurrent.TimeUnit.MINUTES))
+    } finally pool.shutdownNow()
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+    // ContextCleaner may drop RDDs other suites leaked, so compare one way
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- baseline
+    assert(left.isEmpty, s"concurrent requests left ${left.size} persistent RDDs")
   }
 }

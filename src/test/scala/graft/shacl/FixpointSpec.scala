@@ -21,7 +21,11 @@ class FixpointSpec extends SparkTestBase {
     ShapeParser.parseDir(root.get("schemaDir").asText().replace("./tests/cases/", resource("cases/")))
   }
 
-  // rounds under the default config, as the per-round-count fixpoint ran them
+  // rounds under the default config, as the per-round-count fixpoint ran
+  // them. case4 took 3 while the reference's filtered target extraction
+  // (since removed) put the targets that fail in round 1 into the inv0 of
+  // 2 of its shapes before the fixpoint; the fixpoint now proves them F in
+  // its first round, which costs it one more round to converge
   private val rounds = Seq(
     "case1/definitions/case1a.json" -> 3,
     "case1/definitions/case1b.json" -> 4,
@@ -30,7 +34,7 @@ class FixpointSpec extends SparkTestBase {
     "case2/definitions/case2b.json" -> 4,
     "case2/definitions/case2c.json" -> 3,
     "case3/definitions/case3.json" -> 3,
-    "case4/definitions/case4.json" -> 3)
+    "case4/definitions/case4.json" -> 4)
 
   for ((definition, n) <- rounds)
     test(s"fixpoint rounds: recursion/$definition takes $n") {

@@ -11,8 +11,9 @@ class ReportSpec extends SparkTestBase {
     val triples = TripleStore.fromTurtleFile(spark, resource("lubm/LUBM.ttl"))
     val result = new Validator(spark, triples, ShapeParser.parseDir(resource("lubm/shapes"))).run()
     try {
-      val stats = Report.statsText(spark, result).split("\n").toSet
-      val log = Report.validationLog(spark, result).split("\n").toSet
+      val summary = Report.summarize(spark, result, maxInstances = 10000)
+      val stats = Report.statsText(result, summary).split("\n").toSet
+      val log = Report.validationLog(result, summary).split("\n").toSet
       for ((shape, valid, violated) <- Seq(("Department", 3, 0), ("FullProfessor", 2, 3), ("University", 1, 4))) {
         val id = s"http://example.org/${shape}Shape"
         assert(stats.contains(s"$id: targets=${valid + violated} valid=$valid violated=$violated"), stats)
@@ -35,7 +36,7 @@ class ReportSpec extends SparkTestBase {
       val invalid = pairs(_.invalid)
       assert(valid.size == 14 && invalid.size == 9)
 
-      val ttl = Report.validationReportTtl(spark, result)
+      val ttl = Report.validationReportTtl(Report.summarize(spark, result, maxInstances = 10000))
       assert(ttl.contains("sh:conforms false"))
       val reported = """sh:focusNode  <([^>]*)> ;\s*sh:sourceShape  <([^>]*)>""".r
         .findAllMatchIn(ttl).map(m => (m.group(2), m.group(1))).toSeq
@@ -59,7 +60,7 @@ class ReportSpec extends SparkTestBase {
     val triples = TripleStore.fromTurtleFile(spark, resource("lubm/LUBM.ttl"))
     val result = new Validator(spark, triples, ShapeParser.parseDir(resource("lubm/shapes"))).run()
     try {
-      val ttl = Report.validationReportTtl(spark, result, maxResults = 0)
+      val ttl = Report.validationReportTtl(Report.summarize(spark, result, maxInstances = 0))
       assert(ttl.contains("sh:conforms false"), ttl)
       assert(!ttl.contains("sh:result"), ttl)
     } finally result.unpersist()
