@@ -1,6 +1,5 @@
 package graft
 
-import graft.rdf.TripleStore
 import graft.shacl._
 import org.apache.spark.sql.SparkSession
 
@@ -18,8 +17,10 @@ import org.apache.spark.sql.SparkSession
   * warning (main.py:50-51). `-m` is accepted so reference command lines
   * run, and ignored: in the reference it is the VALUES chunk size of the
   * queries sent to the endpoint (main.py:38-39), and there is nothing to
-  * chunk here. The report, stats and log texts render from ONE
-  * `Report.summarize`. Prints the stats text.
+  * chunk here. The input is read as the service reads it
+  * (`Service.input`: a Turtle file in `Tuning.serviceSession`, a triple
+  * parquet in this session). The report, stats and log texts render from
+  * ONE `Report.summarize`. Prints the stats text.
   */
 object Cli {
   def main(args: Array[String]): Unit = {
@@ -78,13 +79,10 @@ object Cli {
     spark.sparkContext.setLogLevel("WARN")
 
     try {
-      val triples =
-        if (dataPath.endsWith(".ttl")) TripleStore.fromTurtleFile(spark, dataPath).cache()
-        else TripleStore.readParquet(spark, dataPath)
-
+      val (session, triples) = Service.input(spark, dataPath)
       val schema = ShapeParser.parseDir(shapesDir, format, lenient = force)
       val cfg = ValidatorConfig(selective = selective, traversal = algo, heuristics = heuristics)
-      val result = new Validator(spark, triples, schema, cfg).run()
+      val result = new Validator(session, triples, schema, cfg).run()
 
       Report.writeVerdicts(spark, result, outDir, ordered = orderBy)
       Report.writeTraces(spark, result, outDir)

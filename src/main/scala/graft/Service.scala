@@ -3,7 +3,7 @@ package graft
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.rdf.TripleStore
 import graft.shacl._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets
@@ -53,13 +53,19 @@ object Service {
       case c => c.toString
     }
 
+  /** The session and triple frame a validation of `dataPath` runs in: a
+    * Turtle file is parsed into [[Tuning.serviceSession]], a triple parquet
+    * is read in `spark` (see the object doc). `Cli` reads its input here
+    * too. */
+  private[graft] def input(spark: SparkSession, dataPath: String): (SparkSession, DataFrame) =
+    if (dataPath.endsWith(".ttl")) {
+      val s = Tuning.serviceSession(spark)
+      (s, TripleStore.fromTurtleFile(s, dataPath))
+    } else (spark, TripleStore.readParquet(spark, dataPath))
+
   private[graft] def runValidation(spark: SparkSession, schemaDir: String,
                                    dataPath: String): ValidationResult = {
-    val (session, triples) =
-      if (dataPath.endsWith(".ttl")) {
-        val s = Tuning.serviceSession(spark)
-        (s, TripleStore.fromTurtleFile(s, dataPath))
-      } else (spark, TripleStore.readParquet(spark, dataPath))
+    val (session, triples) = input(spark, dataPath)
     val schema = ShapeParser.parseDir(schemaDir)
     // fixed service config, reference app/__init__.py:14-18
     new Validator(session, triples, schema,

@@ -46,21 +46,18 @@ object Report {
     }.toMap
   }
 
-  /** All verdicts as one DataFrame(shape, focus, verdict). Each shape's
-    * `marked` frame is read ONCE (verdict = CASE over the T/F flags) rather
-    * than filtered twice for valid/violated: the union's branches execute
-    * concurrently in one job, and two branches over the same not-yet-cached
-    * evaluation subtree race the persist cache and duplicate the whole
-    * shape evaluation — the single read removes the race and halves the
-    * plan. Semantics identical: validFinal = marked∖F, invalid = inv0 ∪ F,
-    * and inv0 is disjoint from marked by construction. */
+  /** All verdicts as one DataFrame(shape, focus, verdict): one union
+    * branch per shape. Each shape's `marked` frame is read ONCE (verdict =
+    * CASE over the F flag) rather than filtered twice for valid/violated:
+    * the union's branches execute concurrently in one job, and two
+    * branches over the same not-yet-cached evaluation subtree race the
+    * persist cache and duplicate the whole shape evaluation — the single
+    * read removes the race and halves the plan. Semantics identical:
+    * validFinal = marked∖F, invalid = F. */
   def verdictFrame(spark: SparkSession, result: ValidationResult): DataFrame = {
-    val parts = result.verdicts.toSeq.flatMap { case (shapeId, v) =>
-      Seq(
-        v.marked.select(lit(shapeId).as("shape"), col("focus"),
-          when(col("__isF"), lit("violated")).otherwise(lit("valid")).as("verdict")),
-        v.inv0.select(lit(shapeId).as("shape"), col("focus"), lit("violated").as("verdict"))
-      )
+    val parts = result.verdicts.toSeq.map { case (shapeId, v) =>
+      v.marked.select(lit(shapeId).as("shape"), col("focus"),
+        when(col("__isF"), lit("violated")).otherwise(lit("valid")).as("verdict"))
     }
     parts.reduceOption(_ union _)
       .getOrElse(spark.emptyDataFrame.select(lit("").as("shape"), lit("").as("focus"), lit("").as("verdict")).limit(0))
@@ -173,11 +170,11 @@ object Report {
 
   /** Per-shape verdict counts plus every counter the reference's stats file
     * carries (ValidationStats.write_all_stats, ValidationStats.py:29-49),
-    * with Spark-side meanings:
-    *  - solution mappings  → rows evaluated by the fixpoint (marked-frame
-    *    rows; max = largest single shape) — the engine's working-set
-    *    analogue of the reference's per-query binding counts; one
-    *    aggregate over every shape's marked frame
+    * with Spark-side meanings, all read from `summary` and the run's
+    * stats — no Spark action:
+    *  - solution mappings  → rows of the verdict frames, one per target
+    *    (valid + violated; max = largest single shape) — the engine's
+    *    working-set analogue of the reference's per-query binding counts
     *  - rules in memory    → the set-algebra engine grounds no explicit
     *    rules; reported as fixpoint iterations × cyclic shape count (the
     *    state actually re-derived per round)
@@ -186,20 +183,11 @@ object Report {
     *  - saturation time    → share of evaluation inside cyclic fixpoints */
   def statsText(result: ValidationResult, summary: Map[String, ShapeSummary]): String = {
     val st = result.stats
-    val marked = result.verdicts.toSeq
-      .map { case (id, v) => v.marked.select(lit(id).as("shape")) }
-      .reduceOption(_ union _)
-      .map(_.groupBy("shape").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-      .getOrElse(Map.empty[String, Long])
-    val perShape = result.verdicts.keys.toSeq.sorted.map { id =>
-      (id, summary(id).valid, summary(id).violated, marked.getOrElse(id, 0L))
-    }
+    val perShape = result.verdicts.keys.toSeq.sorted.map(id => (id, summary(id).valid, summary(id).violated))
     val valid = perShape.map(_._2).sum
     val invalid = perShape.map(_._3).sum
-    val mappings = perShape.map(_._4)
-    val counts = perShape.map { case (id, va, in, _) =>
-      s"$id: targets=${va + in} valid=$va violated=$in"
-    }
+    val mappings = perShape.map { case (_, va, in) => va + in }
+    val counts = perShape.map { case (id, va, in) => s"$id: targets=${va + in} valid=$va violated=$in" }
     (counts :+
       s"all targets: ${valid + invalid}" :+
       s"valid targets: $valid" :+

@@ -36,22 +36,20 @@ final case class ValidatorConfig(
     expandSequencePaths: Boolean = false
 )
 
-/** Per-shape verdict state, all derived from TWO cached frames: the
-  * 2-valued immediately-invalid set `inv0` (local cardinality, sh:or,
-  * sh:sparql — distinct) and `marked(focus,__isF,__isT)`
-  * covering `targets ∖ inv0` with the fixpoint's proven-invalid (F) /
-  * proven-valid (T) flags. Derivations are lazy filters — no further joins:
-  *  - `strictValid` = marked T rows: the subset PROVEN valid by saturation;
-  *    downstream max-cardinality constraints count only these
-  *    (Validation.py:473-527).
-  *  - `invalid` = inv0 ∪ marked F rows (disjoint by construction — no dedup).
-  *  - `validFinal` = marked non-F rows: targets ∖ invalid, which includes
+/** Per-shape verdict state: ONE cached frame `marked(focus,__isF,__isT)`
+  * with a row for every target (targets are distinct, so `focus` is
+  * unique) carrying the fixpoint's flags: F = proven invalid, T = PROVEN
+  * valid by saturation (downstream max-cardinality constraints count only
+  * T rows, Validation.py:473-527). The 2-valued immediately-invalid
+  * targets (local cardinality, sh:or, sh:sparql) are F rows from the
+  * fixpoint's seed onwards. The verdicts are lazy filters — no joins:
+  *  - `invalid` = F rows.
+  *  - `validFinal` = non-F rows: targets ∖ invalid, which includes
   *    fixpoint-undefined instances (the reference classifies targets still
   *    unresolved at termination as valid, Validation.py:70-72,607).
   */
-final case class ShapeVerdict(targets: DataFrame, inv0: DataFrame, marked: DataFrame) {
-  def strictValid: DataFrame = marked.filter(col("__isT")).select(col("focus"))
-  def invalid: DataFrame = inv0.union(marked.filter(col("__isF")).select(col("focus")))
+final case class ShapeVerdict(marked: DataFrame) {
+  def invalid: DataFrame = marked.filter(col("__isF")).select(col("focus"))
   def validFinal: DataFrame = marked.filter(!col("__isF")).select(col("focus"))
 }
 
@@ -138,9 +136,9 @@ final class ValidationStats {
   *
   * Final per-shape verdict (equivalent to Shape rule
   * `S(x) ← Smin(x) ∧ ¬Smax₁(x) ∧ …`, core/Shape.py:187-191):
-  *   - ref'd min m over R:  T needs countDistinct(obj ∈ strictValid(R)) ≥ m;
+  *   - ref'd min m over R:  T needs countDistinct(obj ∈ T(R)) ≥ m;
   *                          F iff countDistinct(obj ∈ targets(R)∖invalid(R)) < m
-  *   - ref'd max m over R:  F iff countDistinct(obj ∈ strictValid(R)) ≥ m+1;
+  *   - ref'd max m over R:  F iff countDistinct(obj ∈ T(R)) ≥ m+1;
   *                          T needs countDistinct(obj ∈ targets(R)∖invalid(R)) ≤ m
   *   - skipped max query (same shape referenced by min AND max,
   *     core/Shape.py:206-222): a ref'd max check whose edges are the union
@@ -358,6 +356,10 @@ final class Validator(
       * only when a parent or the final report consumes it. */
     def pin(id: String, df: DataFrame): DataFrame =
       if (cyclicIds.contains(id)) checkpointed(df) else persisted(df)
+    /** Static artifacts an evaluation reads: an acyclic shape reads them
+      * once, in its only round; a cyclic one re-reads them every round. */
+    def pinCyclic(id: String, df: DataFrame): DataFrame =
+      if (cyclicIds.contains(id)) checkpointed(df) else df
 
     // Static per-shape artifacts. With 4 or more target classes, ALL target
     // scans share ONE type-scan + distinct over (class, subj) — per-shape
@@ -390,22 +392,25 @@ final class Validator(
       s.id -> frame
     }.toMap
 
-    // 2-valued immediately-invalid set per shape, pinned. Its parts are
-    // each distinct by construction (localCardInvalid/orInvalid derive from
-    // the distinct target frame via 1:≤1 joins / anti-joins, sparqlInvalid
-    // is a semi-join of targets), so inv0 needs a distinct ONLY when ≥2
-    // parts could overlap — and a shape with NO parts has no inv0 frame and
-    // skips the union/distinct/persist/anti-join machinery entirely (r06:
-    // was a distinct + persist + anti-join of a provably-empty frame on
-    // every constraint-only shape).
-    val inv0: Map[String, Option[DataFrame]] = schema.shapes.map { s =>
+    // Each target frame gains the flag `__inv0`: the target is 2-valued
+    // immediately invalid (local cardinality, sh:or, sh:sparql). The parts
+    // are each distinct by construction (localCardInvalid/orInvalid derive
+    // from the distinct target frame via 1:≤1 joins / anti-joins,
+    // sparqlInvalid is a semi-join of targets), so their union needs a
+    // distinct ONLY when ≥2 parts could overlap, and the flagging join stays
+    // 1:≤1 — the flagged frame has one row per target. A shape with NO parts
+    // flags nothing and skips the union/distinct/join/pin entirely.
+    val flagged: Map[String, DataFrame] = schema.shapes.map { s =>
       val t = targets(s.id)
       val parts = Seq(localCardInvalid(s, t), orInvalid(s, t), sparqlInvalid(s, t)).flatten
       s.id -> (parts match {
         case Seq() => None
         case Seq(one) => Some(one)
         case many => Some(many.reduce(_ union _).distinct())
-      }).map(pin(s.id, _))
+      }).fold(t.withColumn("__inv0", lit(false))) { inv0 =>
+        pinCyclic(s.id, t.join(inv0.withColumn("__inv0", lit(true)), Seq("focus"), "left")
+          .select($"focus", coalesce($"__inv0", lit(false)).as("__inv0")))
+      }
     }.toMap
 
     // Reference checks per shape: ref'd min, ref'd max, then skipped max
@@ -413,14 +418,13 @@ final class Validator(
     // edges of the min constraints to the same shape (Validation.py:317-325
     // counts atoms from min query bindings), so its edge set is never empty.
     // With `selective` the edges are nested inside the shape's target set
-    // (A7); either way no dedup — counts are distinct. Acyclic shapes read
-    // their edges once (r06: persisting them only paid a cache write), so
-    // only cyclic shapes, whose edges re-join every round, pin them.
+    // (A7); either way no dedup — counts are distinct. Pinned for cyclic
+    // shapes only (r06: persisting acyclic edges only paid a cache write).
     val refChecks: Map[String, Seq[RefCheck]] = schema.shapes.map { s =>
       def check(ref: String, isMin: Boolean, bound: Int, cs: Seq[CardConstraint]): RefCheck = {
         val e = selectiveRestrict(
           cs.map(refEdges(_, targets.getOrElse(ref, emptyFocus()))).reduce(_ union _), targets(s.id))
-        RefCheck(ref, isMin, bound, if (cyclicIds.contains(s.id)) checkpointed(e) else e)
+        RefCheck(ref, isMin, bound, pinCyclic(s.id, e))
       }
       val refMins = s.minConstraints.filter(_.shapeRef.isDefined)
       s.id -> (
@@ -434,21 +438,21 @@ final class Validator(
     stats.totalQueries += refChecks.valuesIterator.map(_.size).sum
     stats.planMs = (System.nanoTime() - t0) / 1000000L
 
-    // Verdict state (T = strictValid, F = invalid), evolving per SCC.
+    // Verdict state (T = proven valid, F = invalid), evolving per SCC.
     val state = scala.collection.mutable.Map[String, ShapeVerdict]()
-    def curT(id: String): DataFrame = state.get(id).map(_.strictValid).getOrElse(emptyFocus())
+    // what a reference to a shape the schema lacks reads (no typed edges)
     val emptyMarked: DataFrame =
       spark.emptyDataset[(String, Boolean, Boolean)].toDF("focus", "__isF", "__isT")
 
     /** One evaluation pass of shape `s` against the current T/F state:
-      * returns `marked(focus, __isF, __isT)` over `targets ∖ inv0d`.
-      * (An empty inv0d costs nothing extra: AQE's empty-relation
-      * propagation eliminates the anti-join at runtime.)
+      * returns `marked(focus, __isF, __isT)` over every target, F from
+      * `__inv0` or a failed reference check.
       *
-      * One aggregation per reference check: left-join the referenced
-      * shape's T/F verdict sets onto the typed edges and aggregate cntT,
-      * cntF and the total typed-object count together (distinct counts —
-      * edges are not pre-deduplicated). nonF = tot - cntF.
+      * One join and one aggregation per reference check: left-join the
+      * referenced shape's verdict frame, renamed to `(o, __t, __f)` and
+      * unique per `o`, onto the typed edges and aggregate cntT, cntF and
+      * the total typed-object count together (distinct counts — edges are
+      * not pre-deduplicated). nonF = tot - cntF.
       *  - min check: F iff nonF < bound; T iff cntT >= bound.
       *  - max check: F iff cntT > bound; T iff nonF <= bound — a monotone
       *    T-guard: proven valid only once the bound can no longer be
@@ -462,23 +466,20 @@ final class Validator(
       * an Expand that triples every edge row before the shuffle (opt r06,
       * guide §2.3 "shuffle fewer bytes"; both bench plans carried
       * `Expand [3 projections]`). Equivalence: the flags depend only on
-      * `o` (semi-set membership), so they are constant across duplicate
-      * (focus, o) rows and `max` preserves them through the dedup;
-      * `count(when(flag, o))` over deduped rows ≡ countDistinct of the
-      * flagged objects (o is never null on a path edge, and `count($"o")`
-      * ≡ countDistinct(o) after dedup either way). */
-    def evalShape(s: Shape, inv0d: Option[DataFrame]): DataFrame = {
-      var cur = inv0d.fold(targets(s.id))(d => targets(s.id).join(d, Seq("focus"), "left_anti"))
-      val fConds = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Column]()
+      * `o` (one verdict row per target), so they are constant across
+      * duplicate (focus, o) rows and `max` preserves them through the
+      * dedup; `count(when(flag, o))` over deduped rows ≡ countDistinct of
+      * the flagged objects (o is never null on a path edge, and
+      * `count($"o")` ≡ countDistinct(o) after dedup either way). */
+    def evalShape(s: Shape): DataFrame = {
+      var cur = flagged(s.id)
+      val fConds = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Column]($"__inv0")
       val tConds = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Column]()
       for ((rc, i) <- refChecks(s.id).zipWithIndex) {
         val (tc, fc, tot) = (s"cntT${i + 1}", s"cntF${i + 1}", s"tot${i + 1}")
-        val tSet = curT(rc.ref).withColumnRenamed("focus", "o").withColumn("__t", lit(true))
-        val fSet = state.get(rc.ref).map(_.invalid).getOrElse(emptyFocus())
-          .withColumnRenamed("focus", "o").withColumn("__f", lit(true))
-        val st = rc.edges
-          .join(tSet, Seq("o"), "left")
-          .join(fSet, Seq("o"), "left")
+        val verdict = state.get(rc.ref).fold(emptyMarked)(_.marked)
+          .select($"focus".as("o"), $"__isT".as("__t"), $"__isF".as("__f"))
+        val st = rc.edges.join(verdict, Seq("o"), "left")
           .groupBy($"focus", $"o").agg(max($"__t").as("__t"), max($"__f").as("__f"))
           .groupBy($"focus").agg(
             count(when($"__t", $"o")).as(tc),
@@ -490,7 +491,7 @@ final class Validator(
         fConds += (if (rc.isMin) nonF < rc.bound else cntT > rc.bound)
         tConds += (if (rc.isMin) cntT >= rc.bound else nonF <= rc.bound)
       }
-      val isF = fConds.reduceOption(_ || _).getOrElse(lit(false))
+      val isF = fConds.reduce(_ || _)
       val isT = !isF && tConds.reduceOption(_ && _).getOrElse(lit(true))
       cur.withColumn("__isF", isF).withColumn("__isT", isT)
         .select($"focus", $"__isF", $"__isT")
@@ -498,8 +499,11 @@ final class Validator(
 
     /** The fixpoint's convergence test, ONE action over the SCC's marked
       * frames: per shape, in SCC order, its numbers of T rows and of F
-      * rows. T and F only grow and inv0 is fixed and disjoint from marked,
-      * so equal counts mean equal T and invalid sets. */
+      * rows. T and F only grow, so equal counts mean equal T and F sets.
+      * The seed's counts are taken as (0, 0) although its F rows already
+      * hold the inv0 targets, so a cyclic SCC whose first round proves
+      * nothing beyond inv0 runs one more round to see it: that costs time,
+      * not correctness. */
     def markedCounts(scc: Seq[String]): Seq[(Long, Long)] = {
       val counted = scc.map(id => state(id).marked.select(lit(id).as("shape"), $"__isT", $"__isF"))
         .reduce(_ union _)
@@ -529,9 +533,9 @@ final class Validator(
     for (scc <- sccs) {
       val cyclic = schema.isCyclic(scc)
       val tSat = System.nanoTime()
-      def verdict(id: String, marked: DataFrame): ShapeVerdict =
-        ShapeVerdict(targets(id), inv0(id).getOrElse(emptyFocus()), marked)
-      scc.foreach(id => state(id) = verdict(id, emptyMarked))
+      // the seed: the inv0 targets F, nothing T
+      scc.foreach(id => state(id) =
+        ShapeVerdict(flagged(id).select($"focus", $"__inv0".as("__isF"), lit(false).as("__isT"))))
       val maxRounds = if (cyclic) config.maxIterations else 1
       var counts = scc.map(_ => (0L, 0L))
       var converged = false
@@ -539,12 +543,12 @@ final class Validator(
       while (!converged && round < maxRounds) {
         round += 1
         // every shape of a round reads the previous round's state
-        val updated = scc.map(id => id -> pin(id, evalShape(schema.byId(id), inv0(id))))
+        val updated = scc.map(id => id -> pin(id, evalShape(schema.byId(id))))
         // a cyclic round is materialized and reads nothing of the one it
         // replaces, so the old round's blocks go now, not at result release
         updated.foreach { case (id, marked) =>
           unpin(state(id).marked)
-          state(id) = verdict(id, marked)
+          state(id) = ShapeVerdict(marked)
         }
         if (cyclic) {
           stats.fixpointIterations += 1

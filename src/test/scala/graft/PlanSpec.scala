@@ -65,7 +65,7 @@ class PlanSpec extends SparkTestBase {
       val r = new Validator(spark, triples, schema,
         ValidatorConfig(selective = selective)).run()
       val n = "LeftSemi".r.findAllIn(
-        r.verdicts(ns + "S").inv0.queryExecution.optimizedPlan.toString).size
+        r.verdicts(ns + "S").marked.queryExecution.optimizedPlan.toString).size
       r.unpersist(); n
     }
     val (on, off) = (semiJoins(true), semiJoins(false))
@@ -185,6 +185,17 @@ class PlanSpec extends SparkTestBase {
       assert("\\bExpand\\b".r.findFirstIn(plan).isEmpty, s"expected no Expand, got:\n$plan")
     } finally result.unpersist()
   }
+
+  // the bench headline plans: the same guard over the TPC-H-derived graph,
+  // in a child session (`SparkEntry` applies its session defaults)
+  for (q <- Seq("q_shacl_validate", "q_shacl_validate_bucketed"))
+    test(s"$q executes without an Expand") {
+      val frame = SparkEntry.queries(q)(spark.newSession(), "/root/testdata/sf0.001")
+      frame.collect()
+      val plan = frame.queryExecution.executedPlan.toString
+      assert(plan.contains("InMemoryTableScan"), plan)
+      assert("\\bExpand\\b".r.findFirstIn(plan).isEmpty, s"expected no Expand, got:\n$plan")
+    }
 
   test("bucketed triple table: groupBy(subj) aggregates without a shuffle") {
     val triples = (0 until 1000)

@@ -2,6 +2,9 @@ package graft.shacl
 
 import graft.SparkTestBase
 import graft.rdf.TripleStore
+import org.apache.spark.TestBus
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The run-statistics and log texts over the LUBM fixture: per-shape
   * valid/violated counts and the target totals. */
@@ -19,10 +22,33 @@ class ReportSpec extends SparkTestBase {
         assert(stats.contains(s"$id: targets=${valid + violated} valid=$valid violated=$violated"), stats)
         assert(log.contains(s"Evaluated shape $id: valid=$valid violated=$violated"), log)
       }
-      for (line <- Seq("all targets: 23", "valid targets: 14", "invalid targets: 9"))
+      for (line <- Seq("all targets: 23", "valid targets: 14", "invalid targets: 9",
+                       "total number of solution mappings: 23"))
         assert(stats.contains(line), stats)
       for (line <- Seq("Shapes evaluated: 5", "Valid targets: 14", "Invalid targets: 9"))
         assert(log.contains(line), log)
+    } finally result.unpersist()
+  }
+
+  test("statsText runs no Spark action") {
+    val triples = TripleStore.fromTurtleFile(spark, resource("lubm/LUBM.ttl"))
+    val result = new Validator(spark, triples, ShapeParser.parseDir(resource("lubm/shapes"))).run()
+    try {
+      val summary = Report.summarize(spark, result, maxInstances = 10000)
+      val actions = scala.collection.mutable.ArrayBuffer[String]()
+      val listener = new QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          actions.synchronized(actions += funcName)
+        override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+          actions.synchronized(actions += funcName)
+      }
+      TestBus.drain(spark.sparkContext)
+      spark.listenerManager.register(listener)
+      try {
+        Report.statsText(result, summary)
+        TestBus.drain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      assert(actions.synchronized(actions.isEmpty), actions)
     } finally result.unpersist()
   }
 

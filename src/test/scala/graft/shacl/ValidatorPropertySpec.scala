@@ -53,13 +53,18 @@ class ValidatorPropertySpec extends SparkTestBase {
     }
 
     test(s"valid and invalid partition the target set (seed=$seed)") {
-      val triples = TripleStore.fromTriples(spark, randomTriples(seed, 40)).cache()
+      val data = randomTriples(seed, 40)
+      val triples = TripleStore.fromTriples(spark, data).cache()
       val result = new Validator(spark, triples, shapeWithMin(2)).run()
       val valid = result.valid(ns + "S").collect().map(_.getString(0)).toSet
       val invalid = result.invalid(ns + "S").collect().map(_.getString(0)).toSet
-      val targets = result.verdicts(ns + "S").targets.collect().map(_.getString(0)).toSet
+      val targets = data.filter(_.pred == Rdf.rdfType).map(_.subj).toSet
       assert((valid & invalid).isEmpty)
       assert((valid | invalid) == targets)
+      // one verdict row per target: the uniqueness a reference check's
+      // single join against this frame relies on
+      val foci = result.verdicts(ns + "S").marked.collect().map(_.getString(0)).toSeq
+      assert(foci.size == targets.size && foci.toSet == targets)
     }
   }
 
